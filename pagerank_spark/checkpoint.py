@@ -22,8 +22,28 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+
+@contextmanager
+def scoped_checkpoint(checkpoint, prefix: str, make):
+    """Yield ``(manager, owned)`` for one operator call.
+
+    A caller's ``checkpoint`` is yielded untouched (``owned`` False), so
+    a later ``resume=True`` call still finds its states.  Without one,
+    ``make(root)`` builds the manager over a fresh temporary root that
+    is removed on every exit path (``owned`` True).  A frame the
+    operator returns must not read from that root: materialise a state
+    read back from it (``localCheckpoint(eager=True)``) before the
+    scope closes."""
+    if checkpoint is not None:
+        yield checkpoint, False
+        return
+    with tempfile.TemporaryDirectory(prefix=prefix) as root:
+        yield make(root), True
 
 
 class _PathOps:

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 
 
@@ -104,13 +104,16 @@ def connected_components(
     ``components_with_domain``).
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        # Durable truncation cadence — see operators/pagerank.py for why
-        # localCheckpoint alone is insufficient (stats-estimate blowup).
-        import tempfile
+    # Durable truncation cadence — see operators/pagerank.py for why
+    # localCheckpoint alone is insufficient (stats-estimate blowup).
+    with scoped_checkpoint(checkpoint, "cc_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=8)) as (checkpoint, owned):
+        return _components(spark, edges, max_iter, checkpoint, owned, resume)
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="cc_ckpt_"), interval=8)
+
+def _components(spark, edges: DataFrame, max_iter: int,
+                checkpoint: CheckpointManager, owned: bool,
+                resume: bool) -> DataFrame:
     vertices = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -153,6 +156,7 @@ def connected_components(
         min(shuffle_parts, prev_sig[0] // EDGES_PER_PARTITION + 1),
         min(8, shuffle_parts),
     )
+    durable = False
     with sized_shuffle(spark, loop_width):
         while it < max_iter:
             it += 1
@@ -163,7 +167,8 @@ def connected_components(
             # symmetrizing (next large-star wants full neighborhoods).
             # One symmetrize per round, not two.
             nxt = symmetrize(_small_star(ls))
-            if checkpoint is not None and checkpoint.should_checkpoint(it):
+            durable = checkpoint.should_checkpoint(it)
+            if durable:
                 nxt = checkpoint.write_state(nxt, it).persist()
             else:
                 # Truncate lineage each round (plan doubles per round).
@@ -171,13 +176,17 @@ def connected_components(
             sig = _edge_checksum(nxt)
             cur.unpersist()
             cur = nxt
-            if checkpoint is not None and checkpoint.should_checkpoint(it):
+            if durable:
                 checkpoint.write_metrics(
                     it, {"edges": float(sig[0]),
                          "checksum": float(sig[1] % 2**31)})
             if sig == prev_sig:
                 break
             prev_sig = sig
+    if owned and durable:
+        # The last edge set was read back from the temporary root.
+        cur, read_back = cur.localCheckpoint(eager=True), cur
+        read_back.unpersist()
 
     # At the fixpoint the (hi→lo) orientation is a star forest: every
     # non-root points directly at its component min.

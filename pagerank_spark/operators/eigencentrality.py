@@ -17,18 +17,12 @@ a guaranteed fixpoint on arbitrary graphs should prefer
 ``pagerank``/``katz_centrality``).  Vertices with zero in-degree
 settle at exactly 0 after the first normalize.
 
-Physical strategy (shared with the PageRank family): ONE sparse
-matvec per iteration through ``pagerank.plan_gather`` (zero-|E|-
-shuffle broadcast join below ``BROADCAST_MAX_VERTICES``; above it the
-degree probe picks the shuffled vs hub-salted layout, so a power-law
-hub cannot straggle the loop while AQE is suspended), ONE mandatory
-constant-size collect per iteration (the L2 norm — the convergence
-aggregate is skipped entirely in fixed-k mode, mirroring
-``hits.py``), lineage truncated per iteration (lazy localCheckpoint)
-with durable write+read on the shared ``CheckpointManager`` cadence,
-and kill/resume through the same (id, pr, prev_pr, out_deg) state
-contract as the global PageRank operator so ``_state_agg`` and the
-resume path are shared verbatim.
+Physical strategy: the global operator's (see ``pagerank.py``), run
+by its shared driver, plus the one mandatory constant-size collect
+per iteration for the L2 norm.  In fixed-k mode (``tol <= 0``, the
+oracle-matched face) there is no stop rule, so the driver skips the
+convergence aggregate off the checkpoint cadence and the norm collect
+is the iteration's only scalar exchange (``hits.py`` rationale).
 """
 
 from __future__ import annotations
@@ -42,10 +36,11 @@ from pagerank_spark.checkpoint import CheckpointManager
 from pagerank_spark.graph import Graph
 from pagerank_spark.operators.pagerank import (
     BROADCAST_MAX_VERTICES,
-    STATE_ROWS_PER_PARTITION,
     GatherPlan,
-    _state_agg,
-    plan_gather,
+    _Fixpoint,
+    _degree_state,
+    _iterate,
+    _raw_weights,
 )
 
 
@@ -71,7 +66,6 @@ def eigenvector_centrality(
     salt_threshold: int | None = None,
     num_salts: int = 8,
     resume: bool = False,
-    static_planning: bool = True,
     broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> EigenvectorResult:
     """Run power iteration to L1 convergence (or ``max_iter``).
@@ -80,139 +74,44 @@ def eigenvector_centrality(
     the global PageRank operator's semantics (shared
     :func:`pagerank.plan_gather` / checkpoint contract).  ``tol`` is
     the L1 delta over the NORMALIZED iterates; ``tol=0`` is the
-    fixed-k oracle face (no convergence aggregate at all).
+    fixed-k oracle face (no convergence aggregate off the checkpoint
+    cadence).
     """
-    from pagerank_spark.session import sized_shuffle, static_plan
-
-    spark = graph.spark
-    n = graph.n
-    if n == 0:
-        empty = spark.createDataFrame([], "id BIGINT, eigen DOUBLE")
-        return EigenvectorResult(empty, 0, 0.0)
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="eigen_ckpt_"),
-            interval=checkpoint_interval)
-
-    plan = plan_gather(graph.edges, graph.out_deg, n, mode=gather_mode,
-                       salt_threshold=salt_threshold, num_salts=num_salts,
-                       broadcast_max_vertices=broadcast_max_vertices)
-    loop_width = max(plan.edges.rdd.getNumPartitions(),
-                     n // STATE_ROWS_PER_PARTITION + 1)
-    try:
-        with static_plan(spark, enabled=static_planning), \
-                sized_shuffle(spark, loop_width):
-            return _eigen_loop(graph, tol, max_iter, checkpoint, resume,
-                               plan)
-    finally:
-        plan.release()
-
-
-def _eigen_loop(
-    graph: Graph,
-    tol: float,
-    max_iter: int,
-    checkpoint: CheckpointManager,
-    resume: bool,
-    plan: GatherPlan,
-) -> EigenvectorResult:
-    spark = graph.spark
-    n = graph.n
-    it = 0
-    metrics: list[dict] = []
-    # Resume-time L1: if the loop below runs zero iterations (resumed
-    # it >= max_iter with l1 >= tol), final_l1 must report this true
-    # aggregate, not 0.0 from the empty metrics list.
-    resume_l1: float | None = None
-
-    if resume and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        state = checkpoint.read_state(it).persist()
-        agg = _state_agg(state)
-        resume_l1 = agg["l1"]
-        if agg["l1"] < tol:
-            ranks = state.select("id", F.col("pr").alias("eigen"))
-            return EigenvectorResult(ranks=ranks, iterations=it,
-                                     final_l1=agg["l1"], metrics=metrics)
-    else:
-        # State: (id, pr, prev_pr, out_deg); pr holds the normalized
-        # iterate so the checkpoint/resume contract (and _state_agg)
-        # is shared verbatim with the PageRank loops; renamed on exit.
-        state = (
-            spark.range(0, n)
-            .join(graph.out_deg, "id", "left")
-            .select("id", F.lit(1.0).alias("pr"),
-                    F.lit(0.0).alias("prev_pr"), "out_deg")
-            .persist()
-        )
-
-    while it < max_iter:
-        it += 1
-        # Gather value is the RAW rank (no 1/out_deg split): restrict
-        # to vertices with out-edges (the only rows the join can hit)
-        # so the broadcast side stays minimal.
-        ranks_w = (
-            state.where(F.col("out_deg").isNotNull())
-            .select(F.col("id").alias("src"), F.col("pr").alias("w"))
-        )
-        contribs = plan.gather(ranks_w)
+    def update(state: DataFrame, plan: GatherPlan, _dangling: float):
+        contribs = plan.gather(_raw_weights(state))
+        # Lazy lineage cut: the norm aggregate below materializes it;
+        # the projection to the next state then re-reads the truncated
+        # plan instead of re-running the gather.
         raw = (
             state.join(contribs, state["id"] == contribs["dst"], "left")
             .select(state["id"],
                     F.coalesce(F.col("contrib"), F.lit(0.0)).alias("x_un"),
                     state["pr"].alias("old_pr"), state["out_deg"])
+            .localCheckpoint(eager=False)
         )
-        # Lazy lineage cut: the norm aggregate below materializes it;
-        # the projection to new_state then re-reads the truncated plan
-        # instead of re-running the gather.
-        raw = raw.localCheckpoint(eager=False)
         row = raw.agg(F.sum(F.col("x_un") * F.col("x_un")).alias("n2")
                       ).first()
         norm = math.sqrt(float(row["n2"] or 0.0))
+        scaled = F.lit(0.0) if norm == 0.0 else F.col("x_un") / F.lit(norm)
+        new_state = raw.select("id", scaled.alias("pr"),
+                               F.col("old_pr").alias("prev_pr"), "out_deg")
         if norm == 0.0:
             # No edges reachable from the init — the all-zero vector
             # is the fixpoint.
-            new_state = raw.select(
-                "id", F.lit(0.0).alias("pr"),
-                F.col("old_pr").alias("prev_pr"), "out_deg")
-            state.unpersist()
-            state = new_state.persist()
-            metrics.append({"iteration": it, "l1": 0.0, "norm": 0.0})
-            break
-        new_state = raw.select(
-            "id", (F.col("x_un") / F.lit(norm)).alias("pr"),
-            F.col("old_pr").alias("prev_pr"), "out_deg")
-        cadence = checkpoint.should_checkpoint(it)
-        if cadence:
-            new_state = checkpoint.write_state(
-                new_state, it,
-                target_partitions=min(max(n // 500_000, 1), 2000)).persist()
-        # Fixed-k mode (tol <= 0, the oracle-matched face) never stops
-        # early — skip the convergence aggregate entirely so the norm
-        # collect is the iteration's ONLY scalar exchange (hits.py
-        # rationale).
-        if tol > 0.0 or cadence:
-            agg = _state_agg(new_state)
-            l1 = agg["l1"]
-            m = {"l1": l1, "sum_pr": agg["sum_pr"], "norm": norm,
-                 "rows": float(n)}
-            metrics.append({"iteration": it, **m})
-            if cadence:
-                checkpoint.write_metrics(it, m)
-        else:
-            l1 = None
-        state.unpersist()
-        # Non-cadence iterations keep new_state a bare projection over
-        # raw's localCheckpoint blocks (re-persisting the projection
-        # would double the |V|-row cache for zero recompute saved).
-        state = new_state
-        if l1 is not None and l1 < tol:
-            break
+            raise _Fixpoint(new_state, {"l1": 0.0, "dangling_mass": 0.0,
+                                        "sum_pr": 0.0, "norm": 0.0})
+        return new_state, {"norm": norm}
 
-    ranks = state.select("id", F.col("pr").alias("eigen"))
-    final_l1 = (metrics[-1]["l1"] if metrics
-                else (resume_l1 if resume_l1 is not None else 0.0))
-    return EigenvectorResult(ranks=ranks, iterations=it,
-                             final_l1=final_l1, metrics=metrics)
+    # pr holds the normalized iterate, from all-ones; renamed on exit.
+    state, it, l1, metrics, _ = _iterate(
+        graph.edges, graph.out_deg, graph.n,
+        lambda: _degree_state(graph, 1.0), update,
+        (lambda l1, _: l1 < tol) if tol > 0.0 else None,
+        checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
+        resume=resume, max_iter=max_iter,
+        gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
+                    num_salts=num_salts,
+                    broadcast_max_vertices=broadcast_max_vertices))
+    return EigenvectorResult(
+        ranks=state.select("id", F.col("pr").alias("eigen")),
+        iterations=it, final_l1=l1, metrics=metrics)

@@ -60,7 +60,6 @@ def hits(
     max_iter: int = 100,
     checkpoint: CheckpointManager | None = None,
     checkpoint_interval: int = 8,
-    static_planning: bool = True,
 ) -> DataFrame:
     """(id, hub, auth) after HITS power iteration on the directed
     edge table, L2-normalized each step.
@@ -109,7 +108,7 @@ def hits(
                .agg(F.count(F.lit(1)).alias("out_deg")),
         n, broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     try:
-        with static_plan(spark, enabled=static_planning), \
+        with static_plan(spark), \
                 sized_shuffle(spark, loop_width):
             return _hits_loop(spark, fwd, rev, n, tol, max_iter,
                               checkpoint)

@@ -18,14 +18,8 @@ to pick alpha from the degree bound (1/max_degree is the classical
 conservative choice).  Unlike PageRank there is no per-source
 normalization: the gather value is the raw rank, not rank/out_deg.
 
-Physical strategy: the per-step sparse matvec runs through the SHARED
-:func:`pagerank.plan_gather` (broadcast under
-``BROADCAST_MAX_VERTICES``; above it the degree probe picks shuffled
-vs hub-salted join, so a power-law hub cannot straggle the loop while
-AQE is suspended), one scalar collect per iteration, lineage truncated
-by the shared checkpoint cadence, loop-scoped shuffle sizing, and
-kill/resume through the same CheckpointManager contract as the global
-operator.
+Physical strategy: the global operator's (see ``pagerank.py``), run
+by its shared driver.
 """
 
 from __future__ import annotations
@@ -38,10 +32,11 @@ from pagerank_spark.checkpoint import CheckpointManager
 from pagerank_spark.graph import Graph
 from pagerank_spark.operators.pagerank import (
     BROADCAST_MAX_VERTICES,
-    STATE_ROWS_PER_PARTITION,
     GatherPlan,
-    _state_agg,
-    plan_gather,
+    _advance,
+    _degree_state,
+    _iterate,
+    _raw_weights,
 )
 
 
@@ -69,7 +64,6 @@ def katz_centrality(
     salt_threshold: int | None = None,
     num_salts: int = 8,
     resume: bool = False,
-    static_planning: bool = True,
     broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> KatzResult:
     """Run Katz centrality to L1 convergence (or ``max_iter``).
@@ -80,111 +74,23 @@ def katz_centrality(
     must pick ``alpha`` below the spectral radius bound; the iteration
     itself only enforces ``max_iter``.
     """
-    from pagerank_spark.session import sized_shuffle, static_plan
-
-    spark = graph.spark
-    n = graph.n
-    if n == 0:
-        empty = spark.createDataFrame([], "id BIGINT, katz DOUBLE")
-        return KatzResult(empty, 0, 0.0)
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="katz_ckpt_"),
-            interval=checkpoint_interval)
-
-    plan = plan_gather(graph.edges, graph.out_deg, n, mode=gather_mode,
-                       salt_threshold=salt_threshold, num_salts=num_salts,
-                       broadcast_max_vertices=broadcast_max_vertices)
-    loop_width = max(plan.edges.rdd.getNumPartitions(),
-                     n // STATE_ROWS_PER_PARTITION + 1)
-    try:
-        with static_plan(spark, enabled=static_planning), \
-                sized_shuffle(spark, loop_width):
-            return _katz_loop(graph, alpha, beta, tol, max_iter,
-                              checkpoint, resume, plan)
-    finally:
-        plan.release()
-
-
-def _katz_loop(
-    graph: Graph,
-    alpha: float,
-    beta: float,
-    tol: float,
-    max_iter: int,
-    checkpoint: CheckpointManager,
-    resume: bool,
-    plan: GatherPlan,
-) -> KatzResult:
-    spark = graph.spark
-    n = graph.n
-    it = 0
-    metrics: list[dict] = []
-    # Resume-time L1: if the loop below runs zero iterations (resumed
-    # it >= max_iter with l1 >= tol), final_l1 must report this true
-    # aggregate, not 0.0 from the empty metrics list.
-    resume_l1: float | None = None
-
-    if resume and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        state = checkpoint.read_state(it).persist()
-        agg = _state_agg(state)
-        resume_l1 = agg["l1"]
-        if agg["l1"] < tol:
-            ranks = state.select("id", F.col("pr").alias("katz"))
-            return KatzResult(ranks=ranks, iterations=it,
-                              final_l1=agg["l1"], metrics=metrics)
-    else:
-        # State: (id, pr, prev_pr, out_deg); pr holds the Katz iterate
-        # so the checkpoint/resume contract (and _state_agg) is shared
-        # verbatim with the PageRank loops; renamed only on exit.
-        state = (
-            spark.range(0, n)
-            .join(graph.out_deg, "id", "left")
-            .select("id", F.lit(0.0).alias("pr"),
-                    F.lit(0.0).alias("prev_pr"), "out_deg")
-            .persist()
-        )
-
-    while it < max_iter:
-        it += 1
-        # Gather value is the RAW rank (no 1/out_deg split): restrict
-        # to vertices with out-edges (the only rows the join can hit)
-        # so the broadcast side stays minimal.
-        ranks_w = (
-            state.where(F.col("out_deg").isNotNull())
-            .select(F.col("id").alias("src"), F.col("pr").alias("w"))
-        )
-        contribs = plan.gather(ranks_w)
+    def update(state: DataFrame, plan: GatherPlan, _dangling: float):
+        # Gather value is the RAW rank (no 1/out_deg split).
         new_pr = (F.lit(beta)
                   + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0)))
-        new_state = (
-            state.join(contribs, state["id"] == contribs["dst"], "left")
-            .select(state["id"], new_pr.alias("pr"),
-                    state["pr"].alias("prev_pr"), state["out_deg"])
-        )
-        if checkpoint.should_checkpoint(it):
-            new_state = checkpoint.write_state(
-                new_state, it,
-                target_partitions=min(max(n // 500_000, 1), 2000)).persist()
-        else:
-            new_state = new_state.localCheckpoint(eager=False)
+        return _advance(state, plan.gather(_raw_weights(state)), new_pr,
+                        "out_deg"), {}
 
-        agg = _state_agg(new_state)
-        l1 = agg["l1"]
-        m = {"l1": l1, "sum_pr": agg["sum_pr"], "rows": float(n)}
-        metrics.append({"iteration": it, **m})
-        if checkpoint.should_checkpoint(it):
-            checkpoint.write_metrics(it, m)
-        state.unpersist()
-        state = new_state
-        if l1 < tol:
-            break
-
-    ranks = state.select("id", F.col("pr").alias("katz"))
-    final_l1 = (metrics[-1]["l1"] if metrics
-                else (resume_l1 if resume_l1 is not None else 0.0))
-    return KatzResult(ranks=ranks, iterations=it,
-                      final_l1=final_l1, metrics=metrics)
+    # pr holds the Katz iterate (zero init, as PageRank's Q1);
+    # renamed on exit.
+    state, it, l1, metrics, _ = _iterate(
+        graph.edges, graph.out_deg, graph.n,
+        lambda: _degree_state(graph, 0.0), update,
+        lambda l1, _: l1 < tol,
+        checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
+        resume=resume, max_iter=max_iter,
+        gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
+                    num_salts=num_salts,
+                    broadcast_max_vertices=broadcast_max_vertices))
+    return KatzResult(ranks=state.select("id", F.col("pr").alias("katz")),
+                      iterations=it, final_l1=l1, metrics=metrics)

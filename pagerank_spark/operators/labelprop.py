@@ -20,12 +20,11 @@ per-round join key — and cached ONCE in a single fused exchange, so
 each round re-exchanges only the |V|-row label side, never the |E|
 edge side; lineage is truncated with a LAZY localCheckpoint that
 materializes inside the round's convergence aggregate — one Spark job
-per round, not two.  AQE stays ON by default: unlike PageRank's
+per round, not two.  AQE stays ON: unlike PageRank's
 byte-identical iterations, LPA's per-round histogram shrinks as
 labels converge, and runtime coalescing measured faster (sf0.1
 medians 1.7s AQE vs 2.1s static; both ~3x the unfused round-2
-build) — ``static_planning=True`` is available for clusters where
-the re-planning overhead dominates.
+build).
 
 Determinism note: synchronous LPA can 2-cycle on bipartite structures;
 ``max_iter`` bounds the loop and the changed-count history detects the
@@ -37,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 
 
 def label_propagation(
@@ -45,18 +44,8 @@ def label_propagation(
     max_iter: int = 20,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
-    static_planning: bool = False,
 ) -> DataFrame:
     """(id, label) for every vertex incident to an edge."""
-    from pagerank_spark.session import static_plan
-
-    if checkpoint is None:
-        # Durable truncation cadence — see operators/pagerank.py for why
-        # localCheckpoint alone is insufficient (stats-estimate blowup).
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            edges.sparkSession, tempfile.mkdtemp(prefix="lpa_ckpt_"), interval=8)
     # src-layout once: InMemoryRelation preserves outputPartitioning,
     # so every round's join on ``src`` reuses it and exchanges only
     # the label side.  The layout is FUSED with the symmetrize dedupe
@@ -75,10 +64,13 @@ def label_propagation(
         .persist()
     )
     # try/finally: the |E|-sized cache must be released on every exit
-    # path, including job failures mid-loop.
+    # path, including job failures mid-loop.  Durable truncation
+    # cadence — see operators/pagerank.py for why localCheckpoint alone
+    # is insufficient (stats-estimate blowup).
     try:
-        with static_plan(edges.sparkSession, enabled=static_planning):
-            return _lpa_loop(und, max_iter, checkpoint, resume)
+        with scoped_checkpoint(checkpoint, "lpa_ckpt_", lambda root: CheckpointManager(
+                edges.sparkSession, root, interval=8)) as (checkpoint, owned):
+            return _lpa_loop(und, max_iter, checkpoint, owned, resume)
     finally:
         und.unpersist()
 
@@ -86,7 +78,8 @@ def label_propagation(
 def _lpa_loop(
     und: DataFrame,
     max_iter: int,
-    checkpoint: CheckpointManager | None,
+    checkpoint: CheckpointManager,
+    owned: bool,
     resume: bool,
 ) -> DataFrame:
     if resume and checkpoint.latest_iteration() is not None:
@@ -103,6 +96,7 @@ def _lpa_loop(
 
     seen_sigs: set[tuple[int, int]] = set()
     prev_cached = labels
+    durable = False
     while it < max_iter:
         it += 1
         lab_src = labels.select(F.col("id").alias("src"), "label")
@@ -127,7 +121,8 @@ def _lpa_loop(
                     F.coalesce("label", "old_label").alias("label"),
                     "old_label")
         )
-        if checkpoint is not None and checkpoint.should_checkpoint(it):
+        durable = checkpoint.should_checkpoint(it)
+        if durable:
             merged = checkpoint.write_state(merged, it).persist()
         else:
             # Truncate lineage each round (plan would double per
@@ -139,7 +134,7 @@ def _lpa_loop(
             F.expr("bit_xor(xxhash64(id, label))").alias("h"),
         ).first()
         changed, sig = int(row["chg"] or 0), (int(row["chg"] or 0), int(row["h"] or 0))
-        if checkpoint is not None and checkpoint.should_checkpoint(it):
+        if durable:
             checkpoint.write_metrics(it, {"changed": float(changed)})
         prev_cached.unpersist()
         prev_cached = merged
@@ -148,6 +143,10 @@ def _lpa_loop(
             break
         seen_sigs.add(sig)
 
+    if owned and durable:
+        # The last labels were read back from the temporary root.
+        labels = prev_cached.localCheckpoint(eager=True).select("id", "label")
+        prev_cached.unpersist()
     return labels
 
 

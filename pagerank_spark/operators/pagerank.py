@@ -47,16 +47,21 @@ Physical strategy (the 100 TB story):
     - Lineage is truncated by iteration-stamped checkpoints
       (checkpoint.py); non-checkpointed iterations persist in memory
       and unpersist their predecessor.
+    - One driver, ``_iterate``, runs this loop for personalized and
+      weighted PageRank, Katz and eigenvector centrality too: each of
+      them supplies only its initial state, vertex update, stop rule
+      and reported projection.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import Graph
 from pagerank_spark import skew
 
@@ -225,7 +230,6 @@ def pagerank(
     salt_threshold: int | None = None,
     num_salts: int = 8,
     resume: bool = False,
-    static_planning: bool = True,
     broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> PageRankResult:
     """Run PageRank to convergence.
@@ -242,95 +246,25 @@ def pagerank(
     (degree > AUTO_SALT_PARTITION_FRACTION × |E|/partitions, one
     constant-size aggregate over the persisted degree table).  An
     explicit ``salt_threshold`` forces salted mode regardless.
-
-    ``static_planning`` runs the loop with AQE suspended (see
-    ``session.static_plan``): every iteration executes the identical
-    hand-sized plan, so runtime re-planning only adds per-iteration
-    overhead; the session setting is restored on exit.
     """
-    from pagerank_spark.session import static_plan
-
-    with static_plan(graph.spark, enabled=static_planning):
-        return _pagerank_loop(
-            graph, damping, tol, max_iter, stop_rule, checkpoint,
-            checkpoint_interval, gather_mode, salt_threshold, num_salts,
-            resume, broadcast_max_vertices)
-
-
-def _pagerank_loop(
-    graph: Graph,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    stop_rule: str,
-    checkpoint: CheckpointManager | None,
-    checkpoint_interval: int,
-    gather_mode: str,
-    salt_threshold: int | None,
-    num_salts: int,
-    resume: bool,
-    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
-) -> PageRankResult:
-    spark = graph.spark
     n = graph.n
-    if n == 0:
-        empty = spark.createDataFrame([], "id BIGINT, pr DOUBLE")
-        return PageRankResult(empty, empty, 0, 0.0)
 
-    # A durable checkpoint cadence is mandatory, not just for resume:
-    # localCheckpoint's LogicalRDD inherits the *estimated* stats of the
-    # plan it truncates, and each iteration's plan multiplies two copies
-    # of the previous state's estimate — the BigInt sizeInBytes doubles
-    # in bit-length per iteration and stats computation itself becomes
-    # the bottleneck (observed: million-digit multiplications by ~iter
-    # 25 over a UDF-derived edge table).  A parquet write+read resets
-    # stats to real file sizes every `interval` iterations, bounding the
-    # blowup at 2^interval × base.
-    if checkpoint is None:
-        import tempfile
+    def update(state: DataFrame, plan: GatherPlan, dangling: float):
+        contribs = plan.gather(_rank_weights(state))
+        return _advance(state, contribs,
+                        _teleport_pr(dangling, damping, n), "out_deg"), {}
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="pagerank_ckpt_"),
-            interval=checkpoint_interval)
-
-    # Mode-aware edge layout (one-time cost, amortized over O(100)
-    # iterations) — resolved by the shared plan_gather: the persisted
-    # graph is dst-partitioned, optimal for the BROADCAST gather (join
-    # needs no exchange, groupBy(dst) reuses the layout: a zero-shuffle
-    # iteration); the SHUFFLE gather re-lays by ``src`` once into the
-    # SQL cache — InMemoryRelation preserves outputPartitioning even
-    # under AQE (localCheckpoint does NOT: an adaptive plan reports
-    # UnknownPartitioning at checkpoint time), so per iteration only
-    # the |V|-row rank side shuffles to match, plus the partial
-    # aggregates (bounded by |distinct dst| per partition, not |E|).
-    # Plan shape asserted in tests/test_plans.py.
-    plan = plan_gather(graph.edges, graph.out_deg, n, mode=gather_mode,
-                       salt_threshold=salt_threshold, num_salts=num_salts,
-                       broadcast_max_vertices=broadcast_max_vertices)
-
-    # Per-iteration exchanges (the |V|-row state join + the scalar
-    # aggregate) are sized to the LOOP's tables, not the session's
-    # worst case: the edge table is already data-sized by
-    # graph.prepare, and the state side needs at most
-    # ceil(n / STATE_ROWS_PER_PARTITION) useful tasks.  At web scale
-    # the session width is smaller than either bound and sized_shuffle
-    # is a no-op (see session.sized_shuffle for the measurements).
-    loop_width = max(plan.edges.rdd.getNumPartitions(),
-                     n // STATE_ROWS_PER_PARTITION + 1)
-
-    # Everything from here runs under try/finally: the |E|-sized
-    # loop-scoped caches must be released on EVERY exit path —
-    # including job failures and interrupts mid-loop — or retries
-    # accumulate edge-table copies in executor storage.
-    from pagerank_spark.session import sized_shuffle
-
-    try:
-        with sized_shuffle(spark, loop_width):
-            return _run_iterations(
-                graph, spark, n, damping, tol, max_iter, stop_rule,
-                checkpoint, resume, plan)
-    finally:
-        plan.release()
+    state, it, l1, metrics, stopped = _iterate(
+        graph.edges, graph.out_deg, n,
+        lambda: _degree_state(graph, 0.0),      # Q1: zero init
+        update, lambda l1, prev_l1: _stopped(l1, prev_l1, stop_rule, tol),
+        checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
+        resume=resume, max_iter=max_iter,
+        gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
+                    num_salts=num_salts,
+                    broadcast_max_vertices=broadcast_max_vertices),
+        l1=1.0)  # ref inits diff=1 (pagerank.cpp:268)
+    return _finish(state, it, l1, metrics, stopped)
 
 
 def _probe_salting(edges: DataFrame, out_deg: DataFrame) -> tuple[str, int | None]:
@@ -355,112 +289,187 @@ def _probe_salting(edges: DataFrame, out_deg: DataFrame) -> tuple[str, int | Non
     return "shuffle", None
 
 
-def _auto_shuffle_or_salted(graph: Graph) -> tuple[str, int | None]:
-    """Graph-object face of :func:`_probe_salting` (kept for tests and
-    callers holding a prepared Graph)."""
-    return _probe_salting(graph.edges, graph.out_deg)
+def _degree_state(graph: Graph, pr0: float) -> DataFrame:
+    """(id, pr = ``pr0``, prev_pr = 0, out_deg NULL⇔dangling) over the
+    domain [0, n).  Carrying out_deg in the state avoids a per-iteration
+    anti-join for the dangling mass (ref recomputes it with a full
+    filter pass each step, pagerank.cpp:210-219)."""
+    return (
+        graph.spark.range(0, graph.n)
+        .join(graph.out_deg, "id", "left")
+        .select("id", F.lit(pr0).alias("pr"),
+                F.lit(0.0).alias("prev_pr"), "out_deg")
+    )
 
 
-def _run_iterations(
-    graph: Graph,
-    spark,
-    n: int,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    stop_rule: str,
-    checkpoint: CheckpointManager | None,
-    resume: bool,
-    plan: GatherPlan,
-) -> PageRankResult:
-    # State: (id, pr, prev_pr, out_deg NULL⇔dangling).  Carrying out_deg
-    # in the state avoids a per-iteration anti-join for the dangling
-    # mass (ref recomputes it with a full filter pass each step,
-    # pagerank.cpp:210-219).
-    it = 0
-    dangling = 0.0
-    prev_l1 = 1.0  # ref inits diff=1 (pagerank.cpp:268)
-    metrics: list[dict] = []
+def _raw_weights(state: DataFrame) -> DataFrame:
+    """(src, w = pr): the un-normalised gather side of Katz and
+    eigenvector centrality, restricted to vertices with out-edges (the
+    only rows the join can hit) so the broadcast side stays minimal."""
+    return (
+        state.where(F.col("out_deg").isNotNull())
+        .select(F.col("id").alias("src"), F.col("pr").alias("w"))
+    )
 
-    if resume and checkpoint is not None and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        state = checkpoint.read_state(it).persist()
-        agg = _state_agg(state)
-        dangling, prev_l1 = agg["dangling"], agg["l1"]
-        # The resume-time stop check must see the SAME (l1, prev_l1)
-        # pair the original run saw at iteration ``it``.  The metrics
-        # row written AT ``it`` carries prev_l1 directly, so this
-        # works at ANY checkpoint cadence; the it-1 lookup is kept as
-        # a fallback for metrics logs written before prev_l1 existed
-        # (it only resolves when iteration it-1 was on the cadence).
-        prior_l1 = checkpoint.read_metric(it, "prev_l1")
-        if prior_l1 is None:
-            prior_l1 = checkpoint.read_metric(it - 1, "l1")
-        if _stopped(prev_l1, prior_l1, stop_rule, tol):
-            return _finish(state, it, prev_l1, metrics, stopped=True)
-    else:
-        # Q1: zero init.
-        state = (
-            spark.range(0, n).withColumnRenamed("id", "id")
-            .join(graph.out_deg, "id", "left")
-            .select("id", F.lit(0.0).alias("pr"),
-                    F.lit(0.0).alias("prev_pr"), "out_deg")
-            .persist()
-        )
 
+def _teleport_pr(dangling: float, damping: float, n: int):
+    """The reference update (pagerank.cpp:131,142) over a joined
+    ``contrib`` column: (contrib + dangling/N)·d + (1-d)/N."""
     inv_n = 1.0 / n
-    stopped = False
-    while it < max_iter:
-        it += 1
-        t0 = time.monotonic()
+    return (
+        (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling * inv_n))
+        * F.lit(damping) + F.lit((1.0 - damping) * inv_n)
+    )
 
-        contribs = plan.gather(_rank_weights(state))
-        new_pr = (
-            (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling * inv_n))
-            * F.lit(damping) + F.lit((1.0 - damping) * inv_n)
-        )
-        new_state = (
-            state.join(contribs, state["id"] == contribs["dst"], "left")
-            .select(state["id"], new_pr.alias("pr"),
-                    state["pr"].alias("prev_pr"), state["out_deg"])
-        )
 
-        # Lineage truncation is NOT optional: the new state references
-        # the old one twice (directly + via the gather), so the logical
-        # plan doubles per iteration — by ~iter 30 plan analysis alone
-        # OOMs the JVM.  Durable checkpoint (write+read parquet) when a
-        # manager says so; eager localCheckpoint (in-memory RDD with a
-        # fresh LogicalRDD plan) otherwise.
-        if checkpoint is not None and checkpoint.should_checkpoint(it):
-            new_state = checkpoint.write_state(
-                new_state, it,
-                target_partitions=min(max(n // 500_000, 1), 2000)).persist()
+def _advance(state: DataFrame, contribs: DataFrame, new_pr, *carry: str) -> DataFrame:
+    """The next un-truncated state: ``new_pr`` over the state left-joined
+    with the gather, the old ``pr`` as ``prev_pr``, and the ``carry``
+    columns unchanged."""
+    return (
+        state.join(contribs, state["id"] == contribs["dst"], "left")
+        .select(state["id"], new_pr.alias("pr"),
+                state["pr"].alias("prev_pr"), *(state[c] for c in carry))
+    )
+
+
+class _Fixpoint(Exception):
+    """Raised by an update whose next iterate is an exact fixpoint
+    (eigenvector centrality's all-zero vector): the driver ends the
+    loop on ``state`` without truncating or aggregating it and takes
+    ``record`` (that state's known aggregate) as the iteration's
+    metrics."""
+
+    def __init__(self, state: DataFrame, record: dict):
+        super().__init__("fixpoint")
+        self.state, self.record = state, record
+
+
+def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
+             *, checkpoint: CheckpointManager | None, checkpoint_interval: int,
+             resume: bool, max_iter: int, gather: dict,
+             dangling_col: str = "out_deg", l1: float = 0.0):
+    """The power iteration shared by PageRank, personalized and weighted
+    PageRank, Katz and eigenvector centrality.
+
+    Each operator supplies only its vertex update; the driver owns the
+    rest.  The state is an (id, pr, prev_pr, ...) table:
+
+      init()                  -> the iteration-0 state (fresh runs only;
+                                 a resumed run reads its latest state).
+      update(state, plan, dangling) -> (next state, extra metrics): the
+                                 next UN-TRUNCATED state, given the gather
+                                 plan and the dangling mass (Σ pr where
+                                 ``dangling_col`` is NULL) of ``state``.
+      stop(l1, prev_l1)       -> bool, checked after each iteration and,
+                                 on resume, against the L1 pair the
+                                 original run saw.  ``None`` means the
+                                 loop only ends at ``max_iter``; the state
+                                 aggregate then runs on checkpoint
+                                 iterations alone, so such an update must
+                                 not read ``dangling``.
+
+    ``l1`` is the delta reported before any iteration has run.  Returns
+    ``(state, iterations, final_l1, metrics, stopped)``; ``stopped`` is
+    False when the loop ran out of ``max_iter``.
+
+    Lineage truncation is NOT optional: the new state references the
+    old one twice (directly + via the gather), so the logical plan
+    doubles per iteration — by ~iter 30 plan analysis alone OOMs the
+    JVM.  Nor is the durable cadence only for resume: localCheckpoint's
+    LogicalRDD inherits the *estimated* stats of the plan it truncates,
+    which double in bit-length per iteration until stats computation
+    itself is the bottleneck; a parquet write+read every ``interval``
+    iterations resets them to real file sizes.  Without a caller's
+    ``checkpoint`` that cadence writes under a temporary root removed on
+    return.
+    """
+    spark = edges.sparkSession
+    if n == 0:
+        empty = spark.createDataFrame([], "id BIGINT, pr DOUBLE, prev_pr DOUBLE")
+        return empty, 0, 0.0, [], False
+    from pagerank_spark.session import sized_shuffle, static_plan
+
+    with ExitStack() as scope:
+        # AQE suspended: every iteration runs the identical hand-sized
+        # plan, so runtime re-planning only adds per-iteration overhead.
+        scope.enter_context(static_plan(spark))
+        ckpt, owned = scope.enter_context(scoped_checkpoint(
+            checkpoint, "power_ckpt_", lambda root: CheckpointManager(
+                spark, root, interval=checkpoint_interval)))
+        # Mode-aware edge layout, built once and amortized over the
+        # loop (plan shapes asserted in tests/test_plans.py); its
+        # |E|-sized caches are released on every exit path.
+        plan = plan_gather(edges, out_deg, n, **gather)
+        scope.callback(plan.release)
+        # Per-iteration exchanges move the |V|-row state, so they are
+        # sized to the loop's tables, not the session's worst case.
+        scope.enter_context(sized_shuffle(spark, max(
+            plan.edges.rdd.getNumPartitions(),
+            n // STATE_ROWS_PER_PARTITION + 1)))
+
+        it, dangling, metrics = 0, 0.0, []
+        if resume and ckpt.latest_iteration() is not None:
+            it = ckpt.latest_iteration()
+            state = ckpt.read_state(it).persist()
+            agg = _state_agg(state, dangling_col)
+            l1, dangling = agg["l1"], agg["dangling"]
+            # The resume-time stop check must see the SAME (l1, prev_l1)
+            # pair the original run saw at iteration ``it``: the metrics
+            # row written AT ``it`` carries prev_l1 (any cadence); the
+            # it-1 lookup serves metrics logs written before it did.
+            prior_l1 = ckpt.read_metric(it, "prev_l1")
+            if prior_l1 is None:
+                prior_l1 = ckpt.read_metric(it - 1, "l1")
+            if stop is not None and stop(l1, prior_l1):
+                return state, it, l1, metrics, True
         else:
-            # lazy: the truncated RDD materializes inside the agg job
-            # below — one Spark job per iteration instead of two.
-            new_state = new_state.localCheckpoint(eager=False)
+            state = init().persist()
 
-        agg = _state_agg(new_state)
-        l1, next_dangling, sum_pr = agg["l1"], agg["dangling"], agg["sum_pr"]
-        wall_ms = (time.monotonic() - t0) * 1000.0
-        m = {"l1": l1, "prev_l1": prev_l1, "dangling_mass": next_dangling,
-             "sum_pr": sum_pr, "wall_ms": wall_ms, "rows": float(n),
-             "num_partitions": float(new_state.rdd.getNumPartitions())}
-        metrics.append({"iteration": it, **m})
-        if checkpoint is not None and checkpoint.should_checkpoint(it):
-            checkpoint.write_metrics(it, m)
+        stopped = durable = False
+        while it < max_iter and not stopped:
+            it += 1
+            t0 = time.monotonic()
+            prev_l1 = l1
+            try:
+                new_state, m = update(state, plan, dangling)
+            except _Fixpoint as fp:
+                new_state, m = fp.state.persist(), fp.record
+                l1, durable, stopped = m["l1"], False, True
+            else:
+                durable = ckpt.should_checkpoint(it)
+                if durable:
+                    new_state = ckpt.write_state(
+                        new_state, it,
+                        target_partitions=min(max(n // 500_000, 1), 2000),
+                    ).persist()
+                else:
+                    # lazy: the truncated RDD materializes inside the
+                    # aggregate below — one Spark job per iteration.
+                    new_state = new_state.localCheckpoint(eager=False)
+                if stop is not None or durable:
+                    # One collect: L1 delta, next dangling mass and Σpr.
+                    agg = _state_agg(new_state, dangling_col)
+                    l1, dangling = agg["l1"], agg["dangling"]
+                    m = {"l1": l1, "dangling_mass": dangling,
+                         "sum_pr": agg["sum_pr"], **m}
+                    stopped = stop is not None and stop(l1, prev_l1)
+            if "l1" in m:
+                m.update(prev_l1=prev_l1,
+                         wall_ms=(time.monotonic() - t0) * 1000.0,
+                         rows=float(n),
+                         num_partitions=float(new_state.rdd.getNumPartitions()))
+                metrics.append({"iteration": it, **m})
+            if durable:
+                ckpt.write_metrics(it, m)
+            state.unpersist()
+            state = new_state
 
-        state.unpersist()
-        state = new_state
-
-        if _stopped(l1, prev_l1, stop_rule, tol):
-            stopped = True
-            break
-        prev_l1 = l1
-        dangling = next_dangling
-
-    return _finish(state, it, metrics[-1]["l1"] if metrics else prev_l1,
-                   metrics, stopped)
+        if owned and durable:
+            # The last state was read back from the temporary root.
+            state, read_back = state.localCheckpoint(eager=True), state
+            read_back.unpersist()
+        return state, it, l1, metrics, stopped
 
 
 def _state_agg(state: DataFrame, dangling_col: str = "out_deg") -> dict:

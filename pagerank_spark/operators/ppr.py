@@ -16,17 +16,10 @@ Dangling mass is re-injected through the restart distribution (not
 uniformly), so the walk never leaks probability away from the
 personalization; at convergence sum(pr) -> 1.
 
-Physical strategy: identical to the global operator — the per-step
-sparse matvec runs through the SHARED ``pagerank.plan_gather``
-(broadcast under ``BROADCAST_MAX_VERTICES``; above it, the degree
-probe picks shuffled vs hub-salted join, so a power-law hub cannot
-straggle the loop while AQE is suspended), one scalar collect per
-iteration (L1 + dangling + sum(pr) in a single aggregate), lineage
-truncated by the shared checkpoint cadence, loop-scoped shuffle
-sizing, and kill/resume through the same CheckpointManager contract.
-The only delta is the per-vertex ``restart`` column carried in the
-state table, which replaces the two 1/N constants in the affine
-update.
+Physical strategy: the global operator's (see ``pagerank.py``), run
+by its shared driver; the only delta is the per-vertex ``restart``
+column carried in the state table, which replaces the two 1/N
+constants of the affine update.
 """
 
 from __future__ import annotations
@@ -40,12 +33,11 @@ from pagerank_spark.graph import Graph
 from pagerank_spark.operators.pagerank import (
     BROADCAST_MAX_VERTICES,
     DAMPING,
-    STATE_ROWS_PER_PARTITION,
     GatherPlan,
     PageRankResult,
+    _advance,
+    _iterate,
     _rank_weights,
-    _state_agg,
-    plan_gather,
 )
 
 
@@ -61,7 +53,6 @@ def personalized_pagerank(
     salt_threshold: int | None = None,
     num_salts: int = 8,
     resume: bool = False,
-    static_planning: bool = True,
     broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> PageRankResult:
     """Run personalized PageRank to L1 convergence (or ``max_iter``).
@@ -75,74 +66,16 @@ def personalized_pagerank(
     ``num_salts``/``resume`` have the global operator's semantics
     (shared :func:`pagerank.plan_gather` / checkpoint contract).
     """
-    from pagerank_spark.session import sized_shuffle, static_plan
-
     spark = graph.spark
-    n = graph.n
-    if n == 0:
-        empty = spark.createDataFrame([], "id BIGINT, pr DOUBLE")
-        return PageRankResult(empty, empty, 0, 0.0)
-    if not isinstance(sources, DataFrame):
-        sources = spark.createDataFrame(
-            [(int(s),) for s in sources], "id BIGINT")
-    if checkpoint is None:
-        import tempfile
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="ppr_ckpt_"),
-            interval=checkpoint_interval)
-
-    plan = plan_gather(graph.edges, graph.out_deg, n, mode=gather_mode,
-                       salt_threshold=salt_threshold, num_salts=num_salts,
-                       broadcast_max_vertices=broadcast_max_vertices)
-    loop_width = max(plan.edges.rdd.getNumPartitions(),
-                     n // STATE_ROWS_PER_PARTITION + 1)
-    try:
-        with static_plan(spark, enabled=static_planning), \
-                sized_shuffle(spark, loop_width):
-            return _ppr_loop(graph, sources, damping, tol, max_iter,
-                             checkpoint, resume, plan)
-    finally:
-        plan.release()
-
-
-def _ppr_loop(
-    graph: Graph,
-    sources: DataFrame,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    checkpoint: CheckpointManager,
-    resume: bool,
-    plan: GatherPlan,
-) -> PageRankResult:
-    spark = graph.spark
-    n = graph.n
-    it = 0
-    dangling = 0.0
-    metrics: list[dict] = []
-    # Resume-time L1: reported as final_l1 when the loop below runs
-    # zero iterations (resumed it >= max_iter with l1 >= tol).
-    resume_l1: float | None = None
-
-    if resume and checkpoint.latest_iteration() is not None:
-        # The checkpointed state carries the restart column, so resume
-        # needs no re-derivation from the source set; the resume-time
-        # stop check recomputes (l1, dangling) from the same (pr,
-        # prev_pr) pair the original run aggregated at iteration ``it``.
-        it = checkpoint.latest_iteration()
-        state = checkpoint.read_state(it).persist()
-        agg = _state_agg(state)
-        dangling = agg["dangling"]
-        resume_l1 = agg["l1"]
-        if agg["l1"] < tol:
-            ranks = state.select("id", "pr")
-            return PageRankResult(ranks=ranks, converged_ranks=ranks,
-                                  iterations=it, final_l1=agg["l1"],
-                                  metrics=metrics)
-    else:
+    def init() -> DataFrame:
+        # Fresh runs only: the checkpointed state carries the restart
+        # column, so a resume never re-derives it from the source set.
+        src = (sources if isinstance(sources, DataFrame)
+               else spark.createDataFrame([(int(s),) for s in sources],
+                                          "id BIGINT"))
         src_set = (
-            sources.select(F.col("id").cast("bigint").alias("id"))
+            src.select(F.col("id").cast("bigint").alias("id"))
             .distinct()
             .withColumn("_s", F.lit(1.0))
         )
@@ -150,58 +83,36 @@ def _ppr_loop(
         if n_sources == 0:
             raise ValueError(
                 "personalized_pagerank needs a non-empty source set")
-        restart_w = 1.0 / n_sources
-
         # State: (id, pr, prev_pr, out_deg, restart) — the restart
         # column replaces both 1/N constants of the global update.
-        state = (
-            spark.range(0, n)
+        return (
+            spark.range(0, graph.n)
             .join(graph.out_deg, "id", "left")
             .join(F.broadcast(src_set), "id", "left")
             .select("id", F.lit(0.0).alias("pr"),
                     F.lit(0.0).alias("prev_pr"), "out_deg",
-                    (F.coalesce(F.col("_s"), F.lit(0.0)) * restart_w)
+                    (F.coalesce(F.col("_s"), F.lit(0.0)) * (1.0 / n_sources))
                     .alias("restart"))
-            .persist()
         )
 
-    while it < max_iter:
-        it += 1
-        contribs = plan.gather(_rank_weights(state))
+    def update(state: DataFrame, plan: GatherPlan, dangling: float):
         # p = d*(gather + dangling*restart) + (1-d)*restart
         new_pr = (
             (F.coalesce(F.col("contrib"), F.lit(0.0))
              + F.lit(dangling) * F.col("restart")) * F.lit(damping)
             + F.lit(1.0 - damping) * F.col("restart")
         )
-        new_state = (
-            state.join(contribs, state["id"] == contribs["dst"], "left")
-            .select(state["id"], new_pr.alias("pr"),
-                    state["pr"].alias("prev_pr"), state["out_deg"],
-                    state["restart"])
-        )
-        if checkpoint.should_checkpoint(it):
-            new_state = checkpoint.write_state(
-                new_state, it,
-                target_partitions=min(max(n // 500_000, 1), 2000)).persist()
-        else:
-            new_state = new_state.localCheckpoint(eager=False)
+        return _advance(state, plan.gather(_rank_weights(state)), new_pr,
+                        "out_deg", "restart"), {}
 
-        agg = _state_agg(new_state)
-        l1, dangling = agg["l1"], agg["dangling"]
-        m = {"l1": l1, "dangling_mass": dangling, "sum_pr": agg["sum_pr"],
-             "rows": float(n)}
-        metrics.append({"iteration": it, **m})
-        if checkpoint.should_checkpoint(it):
-            checkpoint.write_metrics(it, m)
-        state.unpersist()
-        state = new_state
-        if l1 < tol:
-            break
-
+    state, it, l1, metrics, _ = _iterate(
+        graph.edges, graph.out_deg, graph.n, init, update,
+        lambda l1, _: l1 < tol,
+        checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
+        resume=resume, max_iter=max_iter,
+        gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
+                    num_salts=num_salts,
+                    broadcast_max_vertices=broadcast_max_vertices))
     ranks = state.select("id", "pr")
-    final_l1 = (metrics[-1]["l1"] if metrics
-                else (resume_l1 if resume_l1 is not None else 0.0))
-    return PageRankResult(ranks=ranks, converged_ranks=ranks,
-                          iterations=it, final_l1=final_l1,
-                          metrics=metrics)
+    return PageRankResult(ranks=ranks, converged_ranks=ranks, iterations=it,
+                          final_l1=l1, metrics=metrics)

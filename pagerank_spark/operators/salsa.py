@@ -59,7 +59,6 @@ def salsa(
     max_iter: int = 100,
     checkpoint: CheckpointManager | None = None,
     checkpoint_interval: int = 8,
-    static_planning: bool = True,
 ) -> DataFrame:
     """(id, hub, auth) after SALSA power iteration on the directed
     edge table, L1-normalized each step.
@@ -121,7 +120,7 @@ def salsa(
     rev = plan_gather(rev_e, in_deg, n,
                       broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     try:
-        with static_plan(spark, enabled=static_planning), \
+        with static_plan(spark), \
                 sized_shuffle(spark, loop_width):
             return _salsa_loop(spark, fwd, rev, n, tol, max_iter,
                                checkpoint)

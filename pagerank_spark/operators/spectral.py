@@ -55,7 +55,6 @@ def fiedler_vector(
     iterations: int = 20,
     checkpoint: CheckpointManager | None = None,
     checkpoint_interval: int = 8,
-    static_planning: bool = True,
 ) -> DataFrame:
     """(id, fiedler) over the dense domain [0, N) after ``iterations``
     shifted power steps on the simple undirected graph (direction,
@@ -98,7 +97,7 @@ def fiedler_vector(
                        broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     loop_width = und.rdd.getNumPartitions()
     try:
-        with static_plan(spark, enabled=static_planning), \
+        with static_plan(spark), \
                 sized_shuffle(spark, loop_width):
             return _fiedler_loop(spark, plan, deg, n, c, iterations,
                                  checkpoint)

@@ -12,19 +12,14 @@ with ``strength(u) = Σ_w out-weights`` and the same zero init /
 dangling handling / L1 stop as the global operator, so uniform
 weights reproduce it exactly (tested).
 
-Physical strategy: the per-edge split fraction ``w/strength`` is
+Physical strategy: the global operator's (see ``pagerank.py``), run
+by its shared driver.  The per-edge split fraction ``w/strength`` is
 precomputed ONCE into the prepared edge table (one broadcast-sized
 join against the |V|-row strength side), so each iteration is the
-same join + groupBy-sum matvec as the global operator — the weight
-never re-normalizes in the loop.  The matvec runs through the SHARED
-``pagerank.plan_gather`` (broadcast under the module bound; above it
-the degree probe picks the one-time src re-layout or the hub-salted
-join — the loop runs with AQE suspended, so salting is its only skew
-defence), and the loop shares the global operator's checkpoint/
-metrics/resume contract (:class:`PageRankResult`).  Parallel edges
-are combined by summing weights at prepare time (the weighted
-analogue of the dedupe: multiplicity becomes weight instead of being
-dropped).
+same join + groupBy-sum matvec and the weight never re-normalizes in
+the loop.  Parallel edges are combined by summing weights at prepare
+time (the weighted analogue of the dedupe: multiplicity becomes
+weight instead of being dropped).
 """
 
 from __future__ import annotations
@@ -35,11 +30,11 @@ from pagerank_spark.checkpoint import CheckpointManager
 from pagerank_spark.operators.pagerank import (
     BROADCAST_MAX_VERTICES,
     DAMPING,
-    STATE_ROWS_PER_PARTITION,
     GatherPlan,
     PageRankResult,
-    _state_agg,
-    plan_gather,
+    _advance,
+    _iterate,
+    _teleport_pr,
 )
 
 
@@ -91,7 +86,6 @@ def weighted_pagerank(
     salt_threshold: int | None = None,
     num_salts: int = 8,
     resume: bool = False,
-    static_planning: bool = True,
     broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> PageRankResult:
     """Weighted power iteration to L1 < ``tol`` (or ``max_iter``).
@@ -103,113 +97,40 @@ def weighted_pagerank(
     ``gather_mode``/``salt_threshold``/``num_salts``/``resume`` have
     the global operator's semantics.
     """
-    from pagerank_spark.session import sized_shuffle, static_plan
-
     spark = edges_w.sparkSession
     norm, strength, n = prepare_weighted(edges_w, weight_col)
-    if n == 0:
-        # Release what prepare_weighted persisted before the early
-        # return (norm was also eagerly counted).
-        norm.unpersist()
-        strength.unpersist()
-        empty = spark.createDataFrame([], "id BIGINT, pr DOUBLE")
-        return PageRankResult(empty, empty, 0, 0.0)
-    if checkpoint is None:
-        import tempfile
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="wpr_ckpt_"),
-            interval=checkpoint_interval)
-
-    plan = plan_gather(norm, strength.select("id", "out_deg"), n,
-                       mode=gather_mode, salt_threshold=salt_threshold,
-                       num_salts=num_salts,
-                       broadcast_max_vertices=broadcast_max_vertices)
-    loop_width = max(plan.edges.rdd.getNumPartitions(),
-                     n // STATE_ROWS_PER_PARTITION + 1)
-    try:
-        with static_plan(spark, enabled=static_planning), \
-                sized_shuffle(spark, loop_width):
-            return _wpr_loop(spark, strength, n, damping, tol,
-                             max_iter, checkpoint, resume, plan)
-    finally:
-        plan.release()
-        strength.unpersist()
-        norm.unpersist()
-
-
-def _wpr_loop(spark, strength: DataFrame, n: int,
-              damping: float, tol: float, max_iter: int,
-              checkpoint: CheckpointManager, resume: bool,
-              plan: GatherPlan) -> PageRankResult:
-    it = 0
-    dangling = 0.0
-    metrics: list[dict] = []
-    # Resume-time L1: reported as final_l1 when the loop below runs
-    # zero iterations (resumed it >= max_iter with l1 >= tol).
-    resume_l1: float | None = None
-
-    if resume and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        state = checkpoint.read_state(it).persist()
-        agg = _state_agg(state, dangling_col="strength")
-        dangling = agg["dangling"]
-        resume_l1 = agg["l1"]
-        if agg["l1"] < tol:
-            ranks = state.select("id", "pr")
-            return PageRankResult(ranks=ranks, converged_ranks=ranks,
-                                  iterations=it, final_l1=agg["l1"],
-                                  metrics=metrics)
-    else:
+    def init() -> DataFrame:
         # State: (id, pr, prev_pr, strength); strength NULL ⇔ dangling.
-        state = (
+        return (
             spark.range(0, n)
             .join(strength.select("id", "strength"), "id", "left")
             .select("id", F.lit(0.0).alias("pr"),
                     F.lit(0.0).alias("prev_pr"), "strength")
-            .persist()
         )
 
-    inv_n = 1.0 / n
-    while it < max_iter:
-        it += 1
+    def update(state: DataFrame, plan: GatherPlan, dangling: float):
         # Rank side (src, w=pr); the per-edge value is w * f with f
         # the precomputed split fraction riding on the edge table.
         ranks_w = state.select(F.col("id").alias("src"),
                                F.col("pr").alias("w"))
         contribs = plan.gather(ranks_w, value=F.col("w") * F.col("f"))
-        new_pr = (
-            (F.coalesce(F.col("contrib"), F.lit(0.0))
-             + F.lit(dangling * inv_n)) * F.lit(damping)
-            + F.lit((1.0 - damping) * inv_n)
-        )
-        new_state = (
-            state.join(contribs, state["id"] == contribs["dst"], "left")
-            .select(state["id"], new_pr.alias("pr"),
-                    state["pr"].alias("prev_pr"), state["strength"])
-        )
-        if checkpoint.should_checkpoint(it):
-            new_state = checkpoint.write_state(
-                new_state, it,
-                target_partitions=min(max(n // 500_000, 1), 2000)).persist()
-        else:
-            new_state = new_state.localCheckpoint(eager=False)
+        return _advance(state, contribs, _teleport_pr(dangling, damping, n),
+                        "strength"), {}
 
-        agg = _state_agg(new_state, dangling_col="strength")
-        l1, dangling = agg["l1"], agg["dangling"]
-        m = {"l1": l1, "dangling_mass": dangling, "sum_pr": agg["sum_pr"],
-             "rows": float(n)}
-        metrics.append({"iteration": it, **m})
-        if checkpoint.should_checkpoint(it):
-            checkpoint.write_metrics(it, m)
-        state.unpersist()
-        state = new_state
-        if l1 < tol:
-            break
-
+    try:
+        state, it, l1, metrics, _ = _iterate(
+            norm, strength.select("id", "out_deg"), n, init, update,
+            lambda l1, _: l1 < tol,
+            checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
+            resume=resume, max_iter=max_iter,
+            gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
+                        num_salts=num_salts,
+                        broadcast_max_vertices=broadcast_max_vertices),
+            dangling_col="strength")
+    finally:
+        strength.unpersist()
+        norm.unpersist()
     ranks = state.select("id", "pr")
-    final_l1 = (metrics[-1]["l1"] if metrics
-                else (resume_l1 if resume_l1 is not None else 0.0))
-    return PageRankResult(ranks=ranks, converged_ranks=ranks,
-                          iterations=it, final_l1=final_l1,
-                          metrics=metrics)
+    return PageRankResult(ranks=ranks, converged_ranks=ranks, iterations=it,
+                          final_l1=l1, metrics=metrics)

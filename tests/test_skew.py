@@ -54,9 +54,9 @@ def test_salt_edges_covers_all_edges(spark, hub_graph):
 def test_auto_mode_selects_salted_on_power_law(spark, hub_graph):
     # The hub fixture's max out-degree dwarfs |E|/partitions: the auto
     # decision must pick salted and derive a threshold below that hub.
-    from pagerank_spark.operators.pagerank import _auto_shuffle_or_salted
+    from pagerank_spark.operators.pagerank import _probe_salting
 
-    mode, thresh = _auto_shuffle_or_salted(hub_graph)
+    mode, thresh = _probe_salting(hub_graph.edges, hub_graph.out_deg)
     assert mode == "salted"
     max_deg = hub_graph.out_deg.agg(F.max("out_deg")).first()[0]
     assert thresh is not None and 0 < thresh < max_deg
@@ -65,13 +65,13 @@ def test_auto_mode_selects_salted_on_power_law(spark, hub_graph):
 def test_auto_mode_selects_shuffle_on_uniform(spark):
     # A near-regular graph (every src degree ~ |E|/|V|, far below the
     # per-partition share) must NOT salt.
-    from pagerank_spark.operators.pagerank import _auto_shuffle_or_salted
+    from pagerank_spark.operators.pagerank import _probe_salting
 
     edges = spark.range(0, 5000).select(
         (F.col("id") % 500).alias("src"),
         ((F.col("id") * 7 + 3) % 500).alias("dst"))
     g = graph.prepare(edges)
-    mode, thresh = _auto_shuffle_or_salted(g)
+    mode, thresh = _probe_salting(g.edges, g.out_deg)
     assert mode == "shuffle" and thresh is None
 
 
@@ -104,12 +104,15 @@ def test_pagerank_salted_equals_unsalted(spark, hub_graph):
         assert a[k] == pytest.approx(b[k], abs=1e-12)
 
 
-def _spy_modes(monkeypatch, module):
+def _spy_modes(monkeypatch, module=None):
     """Record the gather mode every plan_gather call in ``module``
-    resolves to (the operators import plan_gather by name)."""
+    resolves to.  HITS imports plan_gather by name; the PageRank-family
+    operators run through the shared driver, which looks it up in
+    ``operators/pagerank.py`` (the default ``module``)."""
     import importlib
 
     pr_mod = importlib.import_module("pagerank_spark.operators.pagerank")
+    module = module or pr_mod
     modes = []
     orig = pr_mod.plan_gather
 
@@ -129,7 +132,7 @@ def test_ppr_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
     from pagerank_spark.operators import ppr as ppr_mod
 
     base = ppr_mod.personalized_pagerank(hub_graph, [0], max_iter=10)
-    modes = _spy_modes(monkeypatch, ppr_mod)
+    modes = _spy_modes(monkeypatch)
     auto = ppr_mod.personalized_pagerank(hub_graph, [0], max_iter=10,
                                          broadcast_max_vertices=0)
     assert modes == ["salted"]
@@ -146,7 +149,7 @@ def test_weighted_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
     ew = hub_graph.edges.withColumn(
         "weight", (F.col("src") % 3 + 1).cast("double"))
     base = w_mod.weighted_pagerank(ew, max_iter=10)
-    modes = _spy_modes(monkeypatch, w_mod)
+    modes = _spy_modes(monkeypatch)
     auto = w_mod.weighted_pagerank(ew, max_iter=10,
                                    broadcast_max_vertices=0)
     assert modes == ["salted"]
@@ -162,7 +165,7 @@ def test_katz_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
 
     base = katz_mod.katz_centrality(hub_graph, alpha=0.001, max_iter=6,
                                     tol=0.0)
-    modes = _spy_modes(monkeypatch, katz_mod)
+    modes = _spy_modes(monkeypatch)
     auto = katz_mod.katz_centrality(hub_graph, alpha=0.001, max_iter=6,
                                     tol=0.0, broadcast_max_vertices=0)
     assert modes == ["salted"]
