@@ -24,10 +24,11 @@ from pyspark.sql import functions as F
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from pagerank_spark.session import get_spark, host_cpus, host_driver_memory
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.0
 
-    from pagerank_spark.session import get_spark
     from pagerank_spark import datagen, extraction, graph
     from pagerank_spark.operators import (
         bfs_depths, clustering_coefficients, connected_components, hits,
@@ -44,7 +45,8 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
         extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "48g"),
+            "spark.driver.memory": (os.environ.get("SPARK_DRIVER_MEM")
+                                    or host_driver_memory()),
             "spark.ui.showConsoleProgress": "false",
         },
     )

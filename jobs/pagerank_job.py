@@ -75,6 +75,9 @@ def main() -> None:
 
     n_edges = g.edges.count()
     top = res.top(1).first()
+    # The plan the driver chose and the probe that chose it (the same
+    # on every metrics row of one run).
+    probe = res.metrics[-1] if res.metrics else {}
     result = {
         "n_edges": n_edges,
         "n_vertices": g.n,
@@ -87,6 +90,7 @@ def main() -> None:
         "edges_per_sec_per_iter": round(
             n_edges * res.iterations / iter_sec, 1) if iter_sec else 0.0,
         "cores": cores,
+        **{k: probe.get(k) for k in ("plan", "est_bytes", "budget_bytes")},
     }
     print(json.dumps(result))
     if args.out:

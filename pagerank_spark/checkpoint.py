@@ -46,6 +46,14 @@ def scoped_checkpoint(checkpoint, prefix: str, make):
         yield make(root), True
 
 
+def detach(df: DataFrame, owned: bool, durable: bool) -> DataFrame:
+    """``df``, safe to return from a ``scoped_checkpoint`` scope: when
+    the manager is ``owned`` and the loop's last state was a ``durable``
+    one, ``df`` reads from the temporary root, so it is materialised
+    (``localCheckpoint(eager=True)``) before the root goes."""
+    return df.localCheckpoint(eager=True) if owned and durable else df
+
+
 class _PathOps:
     """Filesystem adapter for the checkpoint root.
 
@@ -322,13 +330,17 @@ class TableCheckpointManager:
         return its[-1] if its else None
 
     def write_metrics(self, it: int, metrics: dict) -> None:
+        # Every key becomes a column, so the table's columns do not depend
+        # on which values a run knew: a string is a STRING column, any
+        # other value (None included, as NULL) a DOUBLE one.
         row = {"iteration": float(it),
-               **{k: float(v) for k, v in metrics.items()
-                  if isinstance(v, (int, float))}}
+               **{k: v if isinstance(v, str) or v is None else float(v)
+                  for k, v in metrics.items()}}
         cols = sorted(row)
         df = self.spark.createDataFrame(
             [tuple(row[c] for c in cols)],
-            ", ".join(f"`{c}` DOUBLE" for c in cols))
+            ", ".join(f"`{c}` {'STRING' if isinstance(row[c], str) else 'DOUBLE'}"
+                      for c in cols))
         self.io.append(df, self._metrics, partition_by=None)
 
     def read_metric(self, it: int, key: str):

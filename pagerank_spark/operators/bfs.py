@@ -40,7 +40,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 
 # Frontiers at or below this exact row count (known from the previous
 # round's aggregate) are broadcast; the first larger one triggers the
@@ -69,14 +69,6 @@ def bfs_depths(
     if not isinstance(sources, DataFrame):
         sources = spark.createDataFrame(
             [(int(s),) for s in sources], "id BIGINT")
-    if checkpoint is None:
-        # Durable truncation cadence — see operators/pagerank.py for
-        # why localCheckpoint alone is insufficient on long loops.
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="bfs_ckpt_"), interval=8)
-
     # NARROW symmetrize: no dedupe, no layout shuffle (module
     # docstring — both were measured waste at 578M edges).  Self-loops
     # never change a depth; drop them.
@@ -90,13 +82,17 @@ def bfs_depths(
     )
     und = und.where(F.col("src") != F.col("dst")).persist()
     try:
-        return _bfs_loop(und, sources, max_depth, checkpoint)
+        # Durable truncation cadence — see operators/pagerank.py for
+        # why localCheckpoint alone is insufficient on long loops.
+        with scoped_checkpoint(checkpoint, "bfs_ckpt_", lambda root: CheckpointManager(
+                spark, root, interval=8)) as (checkpoint, owned):
+            return _bfs_loop(und, sources, max_depth, checkpoint, owned)
     finally:
         und.unpersist()
 
 
 def _bfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
-              checkpoint: CheckpointManager | None) -> DataFrame:
+              checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     depths = (
         sources.select(F.col("id").cast("bigint").alias("id"))
         .distinct()
@@ -109,7 +105,7 @@ def _bfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
     # DataFrame is never force-broadcast on the first round — every
     # later round's count comes free from the convergence aggregate.
     frontier_rows = depths.count()
-    laid_out = False
+    laid_out = durable = False
     d = 0
     while d < max_depth:
         d += 1
@@ -135,7 +131,8 @@ def _bfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
             .withColumn("depth", F.lit(d).cast("int"))
         )
         merged = depths.unionByName(new)
-        if checkpoint is not None and checkpoint.should_checkpoint(d):
+        durable = checkpoint.should_checkpoint(d)
+        if durable:
             merged = checkpoint.write_state(merged, d).persist()
         else:
             # Truncate the union chain each round; LAZY so the
@@ -147,7 +144,7 @@ def _bfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
             F.sum((F.col("depth") == d).cast("long")).alias("grew"),
         ).first()
         grew = int(row["grew"] or 0)
-        if checkpoint is not None and checkpoint.should_checkpoint(d):
+        if durable:
             checkpoint.write_metrics(d, {"reached": float(int(row["n"] or 0)),
                                          "frontier": float(grew)})
         frontier.unpersist()
@@ -162,4 +159,4 @@ def _bfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
         # depths is checkpointed (durable or local) each round, so the
         # relaid edge cache is no longer referenced.
         und.unpersist()
-    return depths.select("id", "depth")
+    return detach(depths, owned, durable).select("id", "depth")

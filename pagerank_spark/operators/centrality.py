@@ -30,7 +30,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 from pagerank_spark.operators.bfs import BROADCAST_MAX_FRONTIER
 
 # 1e6 quantization of the per-landmark 1/d term; the reported score is
@@ -55,12 +55,6 @@ def multi_source_bfs(
             [(int(s),) for s in sources], "source BIGINT")
     else:
         sources = sources.select(F.col(sources.columns[0]).alias("source"))
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="msbfs_ckpt_"), interval=8)
-
     fwd = edges.select("src", "dst")
     halves = [fwd]
     if not directed:
@@ -71,13 +65,15 @@ def multi_source_bfs(
     )
     und = und.where(F.col("src") != F.col("dst")).persist()
     try:
-        return _msbfs_loop(und, sources, max_depth, checkpoint)
+        with scoped_checkpoint(checkpoint, "msbfs_ckpt_", lambda root: CheckpointManager(
+                spark, root, interval=8)) as (checkpoint, owned):
+            return _msbfs_loop(und, sources, max_depth, checkpoint, owned)
     finally:
         und.unpersist()
 
 
 def _msbfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
-                checkpoint: CheckpointManager | None) -> DataFrame:
+                checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     depths = (
         sources.select(F.col("source").cast("bigint").alias("source"))
         .distinct()
@@ -87,7 +83,7 @@ def _msbfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
     )
     frontier = depths.select("source", "id").persist()
     frontier_rows = depths.count()
-    laid_out = False
+    laid_out = durable = False
     d = 0
     while d < max_depth:
         d += 1
@@ -108,7 +104,8 @@ def _msbfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
             .withColumn("depth", F.lit(d).cast("int"))
         )
         merged = depths.unionByName(new)
-        if checkpoint is not None and checkpoint.should_checkpoint(d):
+        durable = checkpoint.should_checkpoint(d)
+        if durable:
             merged = checkpoint.write_state(merged, d).persist()
         else:
             merged = merged.localCheckpoint(eager=False)
@@ -117,7 +114,7 @@ def _msbfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
             F.sum((F.col("depth") == d).cast("long")).alias("grew"),
         ).first()
         grew = int(row["grew"] or 0)
-        if checkpoint is not None and checkpoint.should_checkpoint(d):
+        if durable:
             checkpoint.write_metrics(d, {"reached": float(int(row["n"] or 0)),
                                          "frontier": float(grew)})
         frontier.unpersist()
@@ -131,7 +128,7 @@ def _msbfs_loop(und: DataFrame, sources: DataFrame, max_depth: int,
     frontier.unpersist()
     if laid_out:
         und.unpersist()
-    return depths.select("source", "id", "depth")
+    return detach(depths, owned, durable).select("source", "id", "depth")
 
 
 def harmonic_centrality(

@@ -38,7 +38,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 from pagerank_spark.operators.mis import _PRIORITY_INF
 
@@ -87,110 +87,105 @@ def greedy_coloring(
     if n_active == 0:
         und.unpersist()
         return spark.createDataFrame([], "id BIGINT, color BIGINT")
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="coloring_ckpt_"),
-            interval=checkpoint_interval)
-
-    cur = und          # edges among still-uncolored vertices
-    results: list[DataFrame] = []
-    grnd = 0           # global inner-round counter (cadence + budget)
-    color = 0
-    try:
-        while n_active > 0:
-            if color >= max_colors:
-                raise RuntimeError(
-                    f"greedy_coloring: {n_active} vertices still "
-                    f"uncolored after {max_colors} colors")
-            # ---- inner deterministic-Luby MIS over (active, cur)
-            cand = active
-            cand_e = cur   # edges among current candidates
-            mis_frames: list[DataFrame] = []
-            inner_caches: list[DataFrame] = []
-            while True:
-                grnd += 1
-                if grnd > max_rounds:
+    with scoped_checkpoint(checkpoint, "coloring_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        cur = und          # edges among still-uncolored vertices
+        results: list[DataFrame] = []
+        grnd = 0           # global inner-round counter (cadence + budget)
+        color = 0
+        try:
+            while n_active > 0:
+                if color >= max_colors:
                     raise RuntimeError(
-                        f"greedy_coloring: round budget {max_rounds} "
-                        f"exhausted at color {color} with "
-                        f"{n_active} vertices uncolored")
-                rnd = len(mis_frames) + 1
-                pri = cand.select(
-                    "id",
-                    color_priority(F.col("id"), seed, color, rnd)
-                    .alias("p"))
-                nbr_min = (
-                    cand_e.join(pri.select(F.col("id").alias("dst"),
-                                           F.col("p").alias("pd")), "dst")
-                    .groupBy(F.col("src").alias("id"))
-                    .agg(F.min("pd").alias("mp"))
-                )
-                win = (
-                    pri.join(nbr_min, "id", "left")
-                    .where(F.col("p")
-                           < F.coalesce(F.col("mp"),
-                                        F.lit(_PRIORITY_INF)))
-                    .select("id")
-                    .localCheckpoint(eager=True)
-                )
-                mis_frames.append(win)
-                removed = (
-                    win.unionByName(
-                        cand_e.join(win.withColumnRenamed("id", "src"),
+                        f"greedy_coloring: {n_active} vertices still "
+                        f"uncolored after {max_colors} colors")
+                # ---- inner deterministic-Luby MIS over (active, cur)
+                cand = active
+                cand_e = cur   # edges among current candidates
+                mis_frames: list[DataFrame] = []
+                inner_caches: list[DataFrame] = []
+                while True:
+                    grnd += 1
+                    if grnd > max_rounds:
+                        raise RuntimeError(
+                            f"greedy_coloring: round budget {max_rounds} "
+                            f"exhausted at color {color} with "
+                            f"{n_active} vertices uncolored")
+                    rnd = len(mis_frames) + 1
+                    pri = cand.select(
+                        "id",
+                        color_priority(F.col("id"), seed, color, rnd)
+                        .alias("p"))
+                    nbr_min = (
+                        cand_e.join(pri.select(F.col("id").alias("dst"),
+                                               F.col("p").alias("pd")), "dst")
+                        .groupBy(F.col("src").alias("id"))
+                        .agg(F.min("pd").alias("mp"))
+                    )
+                    win = (
+                        pri.join(nbr_min, "id", "left")
+                        .where(F.col("p")
+                               < F.coalesce(F.col("mp"),
+                                            F.lit(_PRIORITY_INF)))
+                        .select("id")
+                        .localCheckpoint(eager=True)
+                    )
+                    mis_frames.append(win)
+                    removed = (
+                        win.unionByName(
+                            cand_e.join(win.withColumnRenamed("id", "src"),
+                                        "src", "left_semi")
+                            .select(F.col("dst").alias("id")))
+                        .distinct()
+                    )
+                    cand = cand.join(removed, "id", "left_anti") \
+                        .localCheckpoint(eager=True)
+                    if cand.count() == 0:
+                        break
+                    nxt_e = (
+                        cand_e.join(cand.withColumnRenamed("id", "src"),
                                     "src", "left_semi")
-                        .select(F.col("dst").alias("id")))
-                    .distinct()
-                )
-                cand = cand.join(removed, "id", "left_anti") \
+                        .join(cand.withColumnRenamed("id", "dst"),
+                              "dst", "left_semi")
+                        .select("src", "dst")
+                        .persist()
+                    )
+                    nxt_e.count()
+                    inner_caches.append(nxt_e)
+                    cand_e = nxt_e
+                mis = reduce(DataFrame.unionByName, mis_frames) \
                     .localCheckpoint(eager=True)
-                if cand.count() == 0:
+                for c_ in inner_caches:
+                    c_.unpersist()
+                results.append(mis.select(
+                    "id", F.lit(color).cast("bigint").alias("color")))
+                # ---- peel the colored set off the active subgraph
+                active = active.join(mis, "id", "left_anti") \
+                    .localCheckpoint(eager=True)
+                n_active = active.count()
+                color += 1
+                if n_active == 0:
                     break
-                nxt_e = (
-                    cand_e.join(cand.withColumnRenamed("id", "src"),
-                                "src", "left_semi")
-                    .join(cand.withColumnRenamed("id", "dst"),
+                nxt = (
+                    cur.join(active.withColumnRenamed("id", "src"),
+                             "src", "left_semi")
+                    .join(active.withColumnRenamed("id", "dst"),
                           "dst", "left_semi")
                     .select("src", "dst")
-                    .persist()
                 )
-                nxt_e.count()
-                inner_caches.append(nxt_e)
-                cand_e = nxt_e
-            mis = reduce(DataFrame.unionByName, mis_frames) \
-                .localCheckpoint(eager=True)
-            for c_ in inner_caches:
-                c_.unpersist()
-            results.append(mis.select(
-                "id", F.lit(color).cast("bigint").alias("color")))
-            # ---- peel the colored set off the active subgraph
-            active = active.join(mis, "id", "left_anti") \
-                .localCheckpoint(eager=True)
-            n_active = active.count()
-            color += 1
-            if n_active == 0:
-                break
-            nxt = (
-                cur.join(active.withColumnRenamed("id", "src"),
-                         "src", "left_semi")
-                .join(active.withColumnRenamed("id", "dst"),
-                      "dst", "left_semi")
-                .select("src", "dst")
-            )
-            if checkpoint.should_checkpoint(color):
-                nxt = checkpoint.write_state(nxt, color).persist()
-                checkpoint.write_metrics(
-                    color, {"active": float(n_active),
-                            "rounds": float(grnd)})
-            else:
-                nxt = nxt.persist()
-            nxt.count()
+                if checkpoint.should_checkpoint(color):
+                    nxt = checkpoint.write_state(nxt, color).persist()
+                    checkpoint.write_metrics(
+                        color, {"active": float(n_active),
+                                "rounds": float(grnd)})
+                else:
+                    nxt = nxt.persist()
+                nxt.count()
+                if cur is not und:
+                    cur.unpersist()
+                cur = nxt
+        finally:
             if cur is not und:
                 cur.unpersist()
-            cur = nxt
-    finally:
-        if cur is not und:
-            cur.unpersist()
-        und.unpersist()
-    return reduce(DataFrame.unionByName, results)
+            und.unpersist()
+        return reduce(DataFrame.unionByName, results)

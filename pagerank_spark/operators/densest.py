@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 
 # 2*(1+eps) with eps=0.5: one exact float literal shared by engine and
@@ -70,77 +70,72 @@ def densest_subgraph(
         raise ValueError("eps must be > 0")
     spark = edges.sparkSession
     peel_factor = 2.0 * (1.0 + eps)
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="densest_ckpt_"),
-            interval=checkpoint_interval)
-
-    # Columnar SQL cache of the symmetrized simple edge set (same
-    # rationale as k_core: an eager RDD checkpoint of a |2E|-row table
-    # blows the heap at web scale where compressed batches fit).
-    cur = symmetrize(edges).persist()
-    best_density = -1.0
-    best_verts: DataFrame | None = None
-    best_round = 0
-    best_n = best_m = 0
-    metrics: list[dict] = []
-    rnd = 0
-    while rnd < max_rounds:
-        rnd += 1
-        deg = (cur.groupBy(F.col("src").alias("id"))
-               .agg(F.count(F.lit(1)).alias("deg"))
-               .localCheckpoint(eager=True))     # |V'|-row, lineage cut
-        row = deg.agg(F.count(F.lit(1)).alias("n"),
-                      F.sum("deg").alias("s")).first()
-        n = int(row["n"] or 0)
-        if n == 0:
-            break
-        m = int(row["s"]) // 2      # each undirected edge counted twice
-        density = m / n             # IEEE double, matches the oracle
-        metrics.append({"round": rnd, "n": n, "m": m, "density": density})
-        if density > best_density:  # strict: ties keep the earlier round
-            if best_verts is not None:
-                best_verts.unpersist()
-            best_verts = deg.select("id").persist()
-            best_verts.count()
-            best_density, best_round = density, rnd
-            best_n, best_m = n, m
-        # One Python-side multiply (correctly-rounded IEEE, the same
-        # value DuckDB's `3.0 * d` yields) then an int>double compare.
-        thr = peel_factor * density
-        keep = deg.where(F.col("deg") > F.lit(thr)).select("id")
-        nxt = (
-            cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
-        if checkpoint.should_checkpoint(rnd):
-            nxt = checkpoint.write_state(nxt, rnd).persist()
-            checkpoint.write_metrics(
-                rnd, {"n": float(n), "m": float(m), "density": density})
+    with scoped_checkpoint(checkpoint, "densest_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        # Columnar SQL cache of the symmetrized simple edge set (same
+        # rationale as k_core: an eager RDD checkpoint of a |2E|-row table
+        # blows the heap at web scale where compressed batches fit).
+        cur = symmetrize(edges).persist()
+        best_density = -1.0
+        best_verts: DataFrame | None = None
+        best_round = 0
+        best_n = best_m = 0
+        metrics: list[dict] = []
+        rnd = 0
+        while rnd < max_rounds:
+            rnd += 1
+            deg = (cur.groupBy(F.col("src").alias("id"))
+                   .agg(F.count(F.lit(1)).alias("deg"))
+                   .localCheckpoint(eager=True))     # |V'|-row, lineage cut
+            row = deg.agg(F.count(F.lit(1)).alias("n"),
+                          F.sum("deg").alias("s")).first()
+            n = int(row["n"] or 0)
+            if n == 0:
+                break
+            m = int(row["s"]) // 2      # each undirected edge counted twice
+            density = m / n             # IEEE double, matches the oracle
+            metrics.append({"round": rnd, "n": n, "m": m, "density": density})
+            if density > best_density:  # strict: ties keep the earlier round
+                if best_verts is not None:
+                    best_verts.unpersist()
+                best_verts = deg.select("id").persist()
+                best_verts.count()
+                best_density, best_round = density, rnd
+                best_n, best_m = n, m
+            # One Python-side multiply (correctly-rounded IEEE, the same
+            # value DuckDB's `3.0 * d` yields) then an int>double compare.
+            thr = peel_factor * density
+            keep = deg.where(F.col("deg") > F.lit(thr)).select("id")
+            nxt = (
+                cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .select("src", "dst")
+            )
+            if checkpoint.should_checkpoint(rnd):
+                nxt = checkpoint.write_state(nxt, rnd).persist()
+                checkpoint.write_metrics(
+                    rnd, {"n": float(n), "m": float(m), "density": density})
+            else:
+                nxt = nxt.persist()
+            nxt.count()
+            cur.unpersist()
+            cur = nxt
         else:
-            nxt = nxt.persist()
-        nxt.count()
-        cur.unpersist()
-        cur = nxt
-    else:
-        import warnings
+            import warnings
 
-        warnings.warn(
-            f"densest_subgraph: max_rounds={max_rounds} exhausted before "
-            "the peel emptied; result is the best round seen so far",
-            RuntimeWarning, stacklevel=2)
-    cur.unpersist()
-    if best_verts is None:
+            warnings.warn(
+                f"densest_subgraph: max_rounds={max_rounds} exhausted before "
+                "the peel emptied; result is the best round seen so far",
+                RuntimeWarning, stacklevel=2)
+        cur.unpersist()
+        if best_verts is None:
+            return DensestResult(
+                vertices=spark.createDataFrame([], "id BIGINT"),
+                density=0.0, n_vertices=0, n_edges=0, best_round=0,
+                rounds=rnd, metrics=metrics)
+        out = best_verts.localCheckpoint(eager=True)
+        best_verts.unpersist()
         return DensestResult(
-            vertices=spark.createDataFrame([], "id BIGINT"),
-            density=0.0, n_vertices=0, n_edges=0, best_round=0,
-            rounds=rnd, metrics=metrics)
-    out = best_verts.localCheckpoint(eager=True)
-    best_verts.unpersist()
-    return DensestResult(
-        vertices=out.select(F.col("id").cast("bigint").alias("id")),
-        density=best_density, n_vertices=best_n, n_edges=best_m,
-        best_round=best_round, rounds=rnd, metrics=metrics)
+            vertices=out.select(F.col("id").cast("bigint").alias("id")),
+            density=best_density, n_vertices=best_n, n_edges=best_m,
+            best_round=best_round, rounds=rnd, metrics=metrics)

@@ -30,6 +30,8 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
+
 from pyspark.sql import DataFrame, functions as F
 
 from pagerank_spark.checkpoint import CheckpointManager
@@ -42,6 +44,10 @@ from pagerank_spark.operators.pagerank import (
     _iterate,
     _raw_weights,
 )
+
+
+# The metrics of the all-zero fixpoint.
+_ZERO = {"l1": 0.0, "dangling_mass": 0.0, "sum_pr": 0.0, "norm": 0.0}
 
 
 @dataclass
@@ -98,14 +104,20 @@ def eigenvector_centrality(
         if norm == 0.0:
             # No edges reachable from the init — the all-zero vector
             # is the fixpoint.
-            raise _Fixpoint(new_state, {"l1": 0.0, "dangling_mass": 0.0,
-                                        "sum_pr": 0.0, "norm": 0.0})
+            raise _Fixpoint(new_state, _ZERO)
         return new_state, {"norm": norm}
+
+    def local(x, gather, _dangling: float):
+        x_un = gather(x["pr"])
+        norm = math.sqrt(float(np.dot(x_un, x_un)))
+        if norm == 0.0:
+            raise _Fixpoint(x_un, _ZERO)
+        return x_un / norm, {"norm": norm}
 
     # pr holds the normalized iterate, from all-ones; renamed on exit.
     state, it, l1, metrics, _ = _iterate(
         graph.edges, graph.out_deg, graph.n,
-        lambda: _degree_state(graph, 1.0), update,
+        lambda: _degree_state(graph, 1.0), update, local,
         (lambda l1, _: l1 < tol) if tol > 0.0 else None,
         checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
         resume=resume, max_iter=max_iter,

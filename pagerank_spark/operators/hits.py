@@ -45,7 +45,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 from pagerank_spark.operators.pagerank import plan_gather
 
 # Broadcast the |V|-row score side below this many vertices — same
@@ -84,13 +84,6 @@ def hits(
     # keeps per-iteration re-analysis constant-size.
     e = e.persist()
     e.count()
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="hits_ckpt_"),
-            interval=checkpoint_interval)
-
     loop_width = e.rdd.getNumPartitions()
     # Two gather plans over the SAME cached dedupe, keyed by opposite
     # endpoints.  The reversed frame is a zero-cost projection of the
@@ -109,9 +102,11 @@ def hits(
         n, broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     try:
         with static_plan(spark), \
-                sized_shuffle(spark, loop_width):
+                sized_shuffle(spark, loop_width), \
+                scoped_checkpoint(checkpoint, "hits_ckpt_", lambda root: CheckpointManager(
+                    spark, root, interval=checkpoint_interval)) as (checkpoint, owned):
             return _hits_loop(spark, fwd, rev, n, tol, max_iter,
-                              checkpoint)
+                              checkpoint, owned)
     finally:
         fwd.release()
         rev.release()
@@ -120,7 +115,7 @@ def hits(
 
 def _hits_loop(spark, fwd, rev, n: int,
                tol: float, max_iter: int,
-               checkpoint: CheckpointManager) -> DataFrame:
+               checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     state = (
         spark.range(0, n)
         .select("id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
@@ -208,4 +203,5 @@ def _hits_loop(spark, fwd, rev, n: int,
             raw_cached.unpersist()
         if l1 is not None and l1 < tol:
             break
-    return state.select("id", "hub", "auth")
+    durable = it > 0 and checkpoint.should_checkpoint(it)
+    return detach(state, owned, durable).select("id", "hub", "auth")

@@ -34,6 +34,7 @@ from pagerank_spark.operators.pagerank import (
     BROADCAST_MAX_VERTICES,
     GatherPlan,
     _advance,
+    _contrib,
     _degree_state,
     _iterate,
     _raw_weights,
@@ -74,18 +75,19 @@ def katz_centrality(
     must pick ``alpha`` below the spectral radius bound; the iteration
     itself only enforces ``max_iter``.
     """
+    # Gather value is the RAW rank (no 1/out_deg split).
     def update(state: DataFrame, plan: GatherPlan, _dangling: float):
-        # Gather value is the RAW rank (no 1/out_deg split).
-        new_pr = (F.lit(beta)
-                  + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0)))
-        return _advance(state, plan.gather(_raw_weights(state)), new_pr,
-                        "out_deg"), {}
+        return _advance(state, plan.gather(_raw_weights(state)),
+                        beta + alpha * _contrib(), "out_deg"), {}
+
+    def local(x, gather, _dangling: float):
+        return beta + alpha * gather(x["pr"]), {}
 
     # pr holds the Katz iterate (zero init, as PageRank's Q1);
     # renamed on exit.
     state, it, l1, metrics, _ = _iterate(
         graph.edges, graph.out_deg, graph.n,
-        lambda: _degree_state(graph, 0.0), update,
+        lambda: _degree_state(graph, 0.0), update, local,
         lambda l1, _: l1 < tol,
         checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
         resume=resume, max_iter=max_iter,

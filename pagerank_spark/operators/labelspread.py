@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 
 # Per-step score quantization (decimal digits) — see module docstring.
@@ -59,84 +59,79 @@ def label_spreading(
     if not 0.0 < alpha < 1.0:
         raise ValueError("alpha must be in (0, 1)")
     spark = edges.sparkSession
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="spread_ckpt_"),
-            interval=checkpoint_interval)
-
-    und = symmetrize(edges)
-    deg = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("d"))
-    # Split fraction precomputed once into the cached edge layout —
-    # both engines then compute y * (1/deg) as the same two
-    # correctly-rounded IEEE ops.
-    und_f = (
-        und.join(deg.select(F.col("id").alias("src"),
-                            (F.lit(1.0) / F.col("d")).alias("f")), "src")
-        .select("src", "dst", "f")
-        .persist()
-    )
-    und_f.count()
-    seed_rows = (
-        seeds.select(F.col("id").cast("bigint").alias("id"),
-                     F.col("label").cast("bigint").alias("label"),
-                     F.lit(1.0 - alpha).alias("v"))
-        .dropDuplicates(["id", "label"])
-        .localCheckpoint(eager=True)
-    )
-    # y_0 scaled by (1-α) is exactly the seed term of every step; the
-    # t=0 state is the unscaled seed mass.
-    state = seed_rows.select("id", "label", F.lit(1.0).alias("y"))
-    state = state.localCheckpoint(eager=True)
-    state_cached: DataFrame | None = None
-    try:
-        for it in range(1, iterations + 1):
-            gathered = (
-                und_f.join(state.select(F.col("id").alias("src"),
-                                        "label", "y"), "src")
-                .groupBy(F.col("dst").alias("id"), "label")
-                .agg(F.sum(F.col("y") * F.col("f")).alias("g"))
-            )
-            rows = (
-                gathered.select("id", "label",
-                                (F.lit(alpha) * F.col("g")).alias("v"))
-                .unionByName(seed_rows)
-            )
-            nxt = (
-                rows.groupBy("id", "label")
-                .agg(F.round(F.sum("v"), QUANT).alias("y"))
-                # Drop (vertex, class) rows whose mass quantized to
-                # zero: they carry nothing forward, and on a long run
-                # the frontier of dead rows would otherwise grow with
-                # every hop the diffusion makes past where α^t mass
-                # survives the quantization.
-                .where(F.col("y") != 0.0)
-            )
-            if checkpoint.should_checkpoint(it):
-                nxt = checkpoint.write_state(nxt, it).persist()
-                nxt.count()
-                checkpoint.write_metrics(it, {"iteration": float(it)})
-                if state_cached is not None:
-                    state_cached.unpersist()
-                state_cached = nxt
-            else:
-                nxt = nxt.localCheckpoint(eager=True)
-            state = nxt
-        w = Window.partitionBy("id").orderBy(F.desc("y"), F.asc("label"))
-        out = (
-            state.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") == 1)
-            .select("id", "label", F.col("y").alias("score"))
+    with scoped_checkpoint(checkpoint, "spread_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        und = symmetrize(edges)
+        deg = und.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("d"))
+        # Split fraction precomputed once into the cached edge layout —
+        # both engines then compute y * (1/deg) as the same two
+        # correctly-rounded IEEE ops.
+        und_f = (
+            und.join(deg.select(F.col("id").alias("src"),
+                                (F.lit(1.0) / F.col("d")).alias("f")), "src")
+            .select("src", "dst", "f")
+            .persist()
         )
-        if state_cached is not None:
-            out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if state_cached is not None:
-            state_cached.unpersist()
-        und_f.unpersist()
+        und_f.count()
+        seed_rows = (
+            seeds.select(F.col("id").cast("bigint").alias("id"),
+                         F.col("label").cast("bigint").alias("label"),
+                         F.lit(1.0 - alpha).alias("v"))
+            .dropDuplicates(["id", "label"])
+            .localCheckpoint(eager=True)
+        )
+        # y_0 scaled by (1-α) is exactly the seed term of every step; the
+        # t=0 state is the unscaled seed mass.
+        state = seed_rows.select("id", "label", F.lit(1.0).alias("y"))
+        state = state.localCheckpoint(eager=True)
+        state_cached: DataFrame | None = None
+        try:
+            for it in range(1, iterations + 1):
+                gathered = (
+                    und_f.join(state.select(F.col("id").alias("src"),
+                                            "label", "y"), "src")
+                    .groupBy(F.col("dst").alias("id"), "label")
+                    .agg(F.sum(F.col("y") * F.col("f")).alias("g"))
+                )
+                rows = (
+                    gathered.select("id", "label",
+                                    (F.lit(alpha) * F.col("g")).alias("v"))
+                    .unionByName(seed_rows)
+                )
+                nxt = (
+                    rows.groupBy("id", "label")
+                    .agg(F.round(F.sum("v"), QUANT).alias("y"))
+                    # Drop (vertex, class) rows whose mass quantized to
+                    # zero: they carry nothing forward, and on a long run
+                    # the frontier of dead rows would otherwise grow with
+                    # every hop the diffusion makes past where α^t mass
+                    # survives the quantization.
+                    .where(F.col("y") != 0.0)
+                )
+                if checkpoint.should_checkpoint(it):
+                    nxt = checkpoint.write_state(nxt, it).persist()
+                    nxt.count()
+                    checkpoint.write_metrics(it, {"iteration": float(it)})
+                    if state_cached is not None:
+                        state_cached.unpersist()
+                    state_cached = nxt
+                else:
+                    nxt = nxt.localCheckpoint(eager=True)
+                state = nxt
+            w = Window.partitionBy("id").orderBy(F.desc("y"), F.asc("label"))
+            out = (
+                state.withColumn("rnk", F.row_number().over(w))
+                .where(F.col("rnk") == 1)
+                .select("id", "label", F.col("y").alias("score"))
+            )
+            if state_cached is not None:
+                out = out.localCheckpoint(eager=True)
+            return out
+        finally:
+            if state_cached is not None:
+                state_cached.unpersist()
+            und_f.unpersist()
 
 
 def modular_seeds(edges: DataFrame, mod: int, n_classes: int) -> DataFrame:

@@ -46,7 +46,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 
 # |V|-row map sides at or below this bound are broadcast into the
 # edge partitions (same bound class as bfs/pagerank/scc).
@@ -94,76 +94,71 @@ def maximal_matching(
     """
     spark = edges.sparkSession
     und = _canonical_edges(edges).persist()
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="match_ckpt_"),
-            interval=checkpoint_interval)
-
-    cur = und
-    n_edges = cur.count()
-    matched: list[DataFrame] = []
-    rnd = 0
-    try:
-        while n_edges > 0:
-            rnd += 1
-            if rnd > max_rounds:
-                raise RuntimeError(
-                    f"maximal_matching: {n_edges} edges still active "
-                    f"after {max_rounds} rounds")
-            pri = cur.select(
-                "lo", "hi",
-                match_key(F.col("lo"), F.col("hi"), seed, rnd).alias("k"))
-            # Per-vertex minimum key over incident edges (map-side
-            # combined; the union is two zero-shuffle projections).
-            vmin = (
-                pri.select(F.col("lo").alias("id"), "k")
-                .unionByName(pri.select(F.col("hi").alias("id"), "k"))
-                .groupBy("id").agg(F.min("k").alias("mk"))
-            )
-            win = (
-                pri
-                .join(vmin.select(F.col("id").alias("lo"),
-                                  F.col("mk").alias("mkl")), "lo")
-                .join(vmin.select(F.col("id").alias("hi"),
-                                  F.col("mk").alias("mkh")), "hi")
-                .where((F.col("k") == F.col("mkl"))
-                       & (F.col("k") == F.col("mkh")))
-                .select("lo", "hi",
-                        F.lit(rnd).cast("bigint").alias("match_round"))
-                .localCheckpoint(eager=True)
-            )
-            matched.append(win)
-            gone = (
-                win.select(F.col("lo").alias("id"))
-                .unionByName(win.select(F.col("hi").alias("id")))
-            )
-            nxt = (
-                cur.join(gone.withColumnRenamed("id", "lo"),
-                         "lo", "left_anti")
-                .join(gone.withColumnRenamed("id", "hi"),
-                      "hi", "left_anti")
-                .select("lo", "hi")
-            )
-            if checkpoint.should_checkpoint(rnd):
-                # Durable plan reset + per-round lineage/metrics row.
-                nxt = checkpoint.write_state(nxt, rnd).persist()
-                checkpoint.write_metrics(rnd, {"edges": float(n_edges)})
-            else:
-                nxt = nxt.persist()
-            n_edges = nxt.count()
+    with scoped_checkpoint(checkpoint, "match_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        cur = und
+        n_edges = cur.count()
+        matched: list[DataFrame] = []
+        rnd = 0
+        try:
+            while n_edges > 0:
+                rnd += 1
+                if rnd > max_rounds:
+                    raise RuntimeError(
+                        f"maximal_matching: {n_edges} edges still active "
+                        f"after {max_rounds} rounds")
+                pri = cur.select(
+                    "lo", "hi",
+                    match_key(F.col("lo"), F.col("hi"), seed, rnd).alias("k"))
+                # Per-vertex minimum key over incident edges (map-side
+                # combined; the union is two zero-shuffle projections).
+                vmin = (
+                    pri.select(F.col("lo").alias("id"), "k")
+                    .unionByName(pri.select(F.col("hi").alias("id"), "k"))
+                    .groupBy("id").agg(F.min("k").alias("mk"))
+                )
+                win = (
+                    pri
+                    .join(vmin.select(F.col("id").alias("lo"),
+                                      F.col("mk").alias("mkl")), "lo")
+                    .join(vmin.select(F.col("id").alias("hi"),
+                                      F.col("mk").alias("mkh")), "hi")
+                    .where((F.col("k") == F.col("mkl"))
+                           & (F.col("k") == F.col("mkh")))
+                    .select("lo", "hi",
+                            F.lit(rnd).cast("bigint").alias("match_round"))
+                    .localCheckpoint(eager=True)
+                )
+                matched.append(win)
+                gone = (
+                    win.select(F.col("lo").alias("id"))
+                    .unionByName(win.select(F.col("hi").alias("id")))
+                )
+                nxt = (
+                    cur.join(gone.withColumnRenamed("id", "lo"),
+                             "lo", "left_anti")
+                    .join(gone.withColumnRenamed("id", "hi"),
+                          "hi", "left_anti")
+                    .select("lo", "hi")
+                )
+                if checkpoint.should_checkpoint(rnd):
+                    # Durable plan reset + per-round lineage/metrics row.
+                    nxt = checkpoint.write_state(nxt, rnd).persist()
+                    checkpoint.write_metrics(rnd, {"edges": float(n_edges)})
+                else:
+                    nxt = nxt.persist()
+                n_edges = nxt.count()
+                if cur is not und:
+                    cur.unpersist()
+                cur = nxt
+        finally:
             if cur is not und:
                 cur.unpersist()
-            cur = nxt
-    finally:
-        if cur is not und:
-            cur.unpersist()
-        und.unpersist()
-    if not matched:
-        return spark.createDataFrame(
-            [], "lo BIGINT, hi BIGINT, match_round BIGINT")
-    return reduce(DataFrame.unionByName, matched)
+            und.unpersist()
+        if not matched:
+            return spark.createDataFrame(
+                [], "lo BIGINT, hi BIGINT, match_round BIGINT")
+        return reduce(DataFrame.unionByName, matched)
 
 
 def matching_vertex_map(edges: DataFrame,

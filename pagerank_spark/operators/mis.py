@@ -39,7 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 
 # Any value strictly above the 60-bit deviate space: an isolated
@@ -89,73 +89,68 @@ def maximal_independent_set(
     if n_active == 0:
         und.unpersist()
         return spark.createDataFrame([], "id BIGINT, mis_round BIGINT")
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="mis_ckpt_"),
-            interval=checkpoint_interval)
-
-    cur = und
-    winners: list[DataFrame] = []
-    rnd = 0
-    try:
-        while n_active > 0:
-            rnd += 1
-            if rnd > max_rounds:
-                raise RuntimeError(
-                    f"maximal_independent_set: {n_active} vertices still "
-                    f"active after {max_rounds} rounds")
-            pri = active.select(
-                "id", mis_priority(F.col("id"), seed, rnd).alias("p"))
-            # Minimum neighbor priority over the active-restricted
-            # edge table (map-side combined).
-            nbr_min = (
-                cur.join(pri.select(F.col("id").alias("dst"),
-                                    F.col("p").alias("pd")), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("pd").alias("mp"))
-            )
-            win = (
-                pri.join(nbr_min, "id", "left")
-                .where(F.col("p")
-                       < F.coalesce(F.col("mp"), F.lit(_PRIORITY_INF)))
-                .select("id", F.lit(rnd).cast("bigint").alias("mis_round"))
-                .localCheckpoint(eager=True)
-            )
-            winners.append(win)
-            removed = (
-                win.select("id")
-                .unionByName(
-                    cur.join(win.select(F.col("id").alias("src")),
+    with scoped_checkpoint(checkpoint, "mis_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        cur = und
+        winners: list[DataFrame] = []
+        rnd = 0
+        try:
+            while n_active > 0:
+                rnd += 1
+                if rnd > max_rounds:
+                    raise RuntimeError(
+                        f"maximal_independent_set: {n_active} vertices still "
+                        f"active after {max_rounds} rounds")
+                pri = active.select(
+                    "id", mis_priority(F.col("id"), seed, rnd).alias("p"))
+                # Minimum neighbor priority over the active-restricted
+                # edge table (map-side combined).
+                nbr_min = (
+                    cur.join(pri.select(F.col("id").alias("dst"),
+                                        F.col("p").alias("pd")), "dst")
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.min("pd").alias("mp"))
+                )
+                win = (
+                    pri.join(nbr_min, "id", "left")
+                    .where(F.col("p")
+                           < F.coalesce(F.col("mp"), F.lit(_PRIORITY_INF)))
+                    .select("id", F.lit(rnd).cast("bigint").alias("mis_round"))
+                    .localCheckpoint(eager=True)
+                )
+                winners.append(win)
+                removed = (
+                    win.select("id")
+                    .unionByName(
+                        cur.join(win.select(F.col("id").alias("src")),
+                                 "src", "left_semi")
+                        .select(F.col("dst").alias("id")))
+                    .distinct()
+                )
+                active = active.join(removed, "id", "left_anti") \
+                    .localCheckpoint(eager=True)
+                n_active = active.count()
+                if n_active == 0:
+                    break
+                nxt = (
+                    cur.join(active.withColumnRenamed("id", "src"),
                              "src", "left_semi")
-                    .select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            active = active.join(removed, "id", "left_anti") \
-                .localCheckpoint(eager=True)
-            n_active = active.count()
-            if n_active == 0:
-                break
-            nxt = (
-                cur.join(active.withColumnRenamed("id", "src"),
-                         "src", "left_semi")
-                .join(active.withColumnRenamed("id", "dst"),
-                      "dst", "left_semi")
-                .select("src", "dst")
-            )
-            if checkpoint.should_checkpoint(rnd):
-                # Durable plan reset + per-round lineage/metrics row.
-                nxt = checkpoint.write_state(nxt, rnd).persist()
-                checkpoint.write_metrics(rnd, {"active": float(n_active)})
-            else:
-                nxt = nxt.persist()
-            nxt.count()
+                    .join(active.withColumnRenamed("id", "dst"),
+                          "dst", "left_semi")
+                    .select("src", "dst")
+                )
+                if checkpoint.should_checkpoint(rnd):
+                    # Durable plan reset + per-round lineage/metrics row.
+                    nxt = checkpoint.write_state(nxt, rnd).persist()
+                    checkpoint.write_metrics(rnd, {"active": float(n_active)})
+                else:
+                    nxt = nxt.persist()
+                nxt.count()
+                if cur is not und:
+                    cur.unpersist()
+                cur = nxt
+        finally:
             if cur is not und:
                 cur.unpersist()
-            cur = nxt
-    finally:
-        if cur is not und:
-            cur.unpersist()
-        und.unpersist()
-    return reduce(DataFrame.unionByName, winners)
+            und.unpersist()
+        return reduce(DataFrame.unionByName, winners)

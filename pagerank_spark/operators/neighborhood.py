@@ -53,7 +53,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from pagerank_spark import skew
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 from pagerank_spark.operators.pagerank import GatherPlan, plan_gather
 
 N_SKETCHES = 8
@@ -146,12 +146,6 @@ def neighborhood_function(
     plan class to a PageRank iteration, state is |V| × (K+1) longs.
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="nf_ckpt_"), interval=8)
-
     fwd = edges.select("src", "dst")
     if directed:
         # v pulls u's sketch along (v -> u): reverse so the sketch
@@ -178,28 +172,32 @@ def neighborhood_function(
     cur = _init_sketches(vertices, n_sketches).persist()
     cur.count()
     try:
-        if _on_round is not None:
-            _on_round(0, cur)
-        for r in range(1, max_radius + 1):
-            msgs = _gather_or(plan, cur, n_sketches)
-            nxt = (
-                cur.join(msgs, cur.src == msgs.dst, "left")
-                .select(
-                    cur.src,
-                    *[
-                        (F.coalesce(F.col(f"m{k}"), F.lit(0))
-                         .bitwiseOR(F.col(f"s{k}"))).alias(f"s{k}")
-                        for k in range(n_sketches)
-                    ],
-                )
-            )
-            nxt = checkpoint.write_state(nxt, r).persist()
-            nxt.count()
-            cur.unpersist()
-            cur = nxt
+        # Every round is a durable one, so a state returned from a
+        # temporary root is materialised before the root goes.
+        with scoped_checkpoint(checkpoint, "nf_ckpt_", lambda root: CheckpointManager(
+                spark, root, interval=8)) as (checkpoint, owned):
             if _on_round is not None:
-                _on_round(r, cur)
-        return _finalize(cur, n_sketches)
+                _on_round(0, cur)
+            for r in range(1, max_radius + 1):
+                msgs = _gather_or(plan, cur, n_sketches)
+                nxt = (
+                    cur.join(msgs, cur.src == msgs.dst, "left")
+                    .select(
+                        cur.src,
+                        *[
+                            (F.coalesce(F.col(f"m{k}"), F.lit(0))
+                             .bitwiseOR(F.col(f"s{k}"))).alias(f"s{k}")
+                            for k in range(n_sketches)
+                        ],
+                    )
+                )
+                nxt = checkpoint.write_state(nxt, r).persist()
+                nxt.count()
+                cur.unpersist()
+                cur = nxt
+                if _on_round is not None:
+                    _on_round(r, cur)
+            return _finalize(detach(cur, owned, max_radius >= 1), n_sketches)
     finally:
         plan.release()
 

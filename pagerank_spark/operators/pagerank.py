@@ -2,7 +2,8 @@
 
 Re-expresses the reference's hard-wired dataflow
 (``/root/reference/pagerank/src/lib/pagerank.cpp:94-242``) as one
-Spark job per iteration:
+Spark job per iteration, or — on graphs that fit one task — as one
+task for the whole loop (the local backend below):
 
     gather:   edges ⋈ ranks on src  →  groupBy(dst).sum(pr/out_deg)
               (ref: the in-edge gather loop, pagerank.cpp:123-128)
@@ -27,6 +28,19 @@ parity):
         buffer truncation — Spark's shuffle is lossless.
 
 Physical strategy (the 100 TB story):
+    - gather_mode="local": the whole loop in ONE ``mapInArrow`` task
+      over ``edges.coalesce(1)`` and the state — edges sorted by
+      (src, dst), one ``np.bincount`` gather per iteration, no Spark
+      job per iteration (``_run_local``).  "auto" picks it when no
+      ``salt_threshold`` is given, n <= ``broadcast_max_vertices``
+      (a vector that may not be broadcast may not sit in one task
+      either) and ``_local_footprint(|E|, n)`` fits LOCAL_MAX_BYTES.
+      One task needs no lineage-truncation cadence: without a
+      caller's checkpoint nothing is committed.  A caller's cadence is
+      still honoured (states stream out of the task and are committed
+      in order); the loop is then split into tasks that each cache at
+      most LOCAL_MAX_BYTES of uncommitted states.  Resume is
+      bit-identical only within one backend.
     - The edge table is deduped, degree-joined and persisted ONCE,
       hash-partitioned by ``dst`` (the aggregation key).  Per
       iteration only the |V|-row rank table moves.
@@ -44,21 +58,24 @@ Physical strategy (the 100 TB story):
       the new state computes L1 delta, next dangling mass, and Σpr
       together (the reference needs two passes + an all-gather,
       myRDMA.cpp:157-162; we need one partial-agg collect).
-    - Lineage is truncated by iteration-stamped checkpoints
-      (checkpoint.py); non-checkpointed iterations persist in memory
-      and unpersist their predecessor.
+    - Lineage of the distributed loop is truncated by
+      iteration-stamped checkpoints (checkpoint.py); non-checkpointed
+      iterations persist in memory and unpersist their predecessor.
     - One driver, ``_iterate``, runs this loop for personalized and
       weighted PageRank, Katz and eigenvector centrality too: each of
-      them supplies only its initial state, vertex update, stop rule
-      and reported projection.
+      them supplies only its initial state, vertex update (as a Spark
+      and a NumPy function), stop rule and reported projection.  Every
+      metrics row records the plan and the probe that chose it.
 """
 
 from __future__ import annotations
 
+import functools
 import time
 from contextlib import ExitStack
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
@@ -76,6 +93,16 @@ AUTO_SALT_PARTITION_FRACTION = 0.5
 # loop-scoped shuffle width: enough partitions that no per-iteration
 # exchange task holds more than this many |V|-side rows.
 STATE_ROWS_PER_PARTITION = 500_000
+# Local backend: the whole loop runs in one Python task when the
+# footprint estimated by ``_local_footprint`` fits LOCAL_MAX_BYTES.
+# The per-edge and per-vertex costs are the kernel's measured peak RSS
+# above the worker's idle baseline (ARCHITECTURE.md, "Local backend").
+LOCAL_BYTES_PER_EDGE = 120
+LOCAL_BYTES_PER_VERTEX = 160
+LOCAL_MAX_BYTES = 1 << 30
+# Upper bound on one cached cadence state row of a local task: up to
+# five 8-byte state columns, the iteration and the (NULL) metrics.
+LOCAL_BYTES_PER_CACHED_ROW = 64
 
 
 @dataclass
@@ -137,7 +164,7 @@ class GatherPlan:
     runtime backstop (VERDICT r3 item 1).
     """
 
-    mode: str                   # broadcast | shuffle | salted
+    mode: str                   # local | broadcast | shuffle | salted
     edges: DataFrame            # the layout _gather consumes
     salted_ctx: tuple | None = None   # (salted_edges, hot, num_salts)
     salt_threshold: int | None = None
@@ -145,6 +172,9 @@ class GatherPlan:
 
     def gather(self, ranks_w: DataFrame, value=None) -> DataFrame:
         """(dst, contrib = Σ value) — ranks_w carries (src, w, ...)."""
+        if self.mode == "local":
+            raise ValueError("a local plan runs its whole loop in one task "
+                             "and has no per-iteration gather")
         return _gather(self.edges, ranks_w, self.mode, self.salted_ctx,
                        value)
 
@@ -177,6 +207,11 @@ def plan_gather(
     side — pass in-degrees when gathering over a reversed edge table
     (HITS' hub gather).
 
+    ``mode="local"`` (without a ``salt_threshold``) returns a plan with
+    no layout and no caches: ``_iterate`` then runs the whole loop in
+    one task.  "auto" never picks it, because the loops that call
+    ``GatherPlan.gather`` themselves need a per-iteration gather.
+
     Layout cost (one-time, amortized over the loop):
       broadcast — none: the caller's layout already serves the
         groupBy(dst) and the join needs no exchange at all.
@@ -185,6 +220,8 @@ def plan_gather(
       salted    — one |E| salt + re-partition by (src, salt), plus the
         broadcast-sized hot set.
     """
+    if mode == "local" and salt_threshold is None:
+        return GatherPlan(mode="local", edges=edges)
     caches: list[DataFrame] = []
     if mode == "auto":
         if salt_threshold is not None:
@@ -239,8 +276,10 @@ def pagerank(
       "reference" — the reference's own rule: L1 < 1e-5 OR plateau
                     |L1 - prev_L1| < 1e-7 (ref pagerank.cpp:229-236).
 
-    gather_mode="auto" picks the physical gather from the DATA:
-    broadcast while the rank table fits (``broadcast_max_vertices``),
+    gather_mode="auto" picks the physical gather from the DATA: the
+    local backend (the whole loop in one task) while the graph fits its
+    memory budget (``_choose_mode``), else broadcast while the rank
+    table fits (``broadcast_max_vertices``),
     otherwise shuffle — upgraded to salted when the out-degree
     distribution shows hubs that would straggle the shuffled join
     (degree > AUTO_SALT_PARTITION_FRACTION × |E|/partitions, one
@@ -252,12 +291,17 @@ def pagerank(
     def update(state: DataFrame, plan: GatherPlan, dangling: float):
         contribs = plan.gather(_rank_weights(state))
         return _advance(state, contribs,
-                        _teleport_pr(dangling, damping, n), "out_deg"), {}
+                        _teleport(_contrib(), dangling, damping, n),
+                        "out_deg"), {}
+
+    def local(x, gather, dangling: float):
+        contrib = gather(x["pr"] / x["out_deg"])
+        return _teleport(contrib, dangling, damping, n), {}
 
     state, it, l1, metrics, stopped = _iterate(
         graph.edges, graph.out_deg, n,
         lambda: _degree_state(graph, 0.0),      # Q1: zero init
-        update, lambda l1, prev_l1: _stopped(l1, prev_l1, stop_rule, tol),
+        update, local, lambda l1, prev_l1: _stopped(l1, prev_l1, stop_rule, tol),
         checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
         resume=resume, max_iter=max_iter,
         gather=dict(mode=gather_mode, salt_threshold=salt_threshold,
@@ -312,14 +356,18 @@ def _raw_weights(state: DataFrame) -> DataFrame:
     )
 
 
-def _teleport_pr(dangling: float, damping: float, n: int):
-    """The reference update (pagerank.cpp:131,142) over a joined
-    ``contrib`` column: (contrib + dangling/N)·d + (1-d)/N."""
+def _contrib():
+    """The joined gather column of a distributed update; NULL (no
+    in-edges) reads as 0."""
+    return F.coalesce(F.col("contrib"), F.lit(0.0))
+
+
+def _teleport(contrib, dangling: float, damping: float, n: int):
+    """The reference update (pagerank.cpp:131,142):
+    (contrib + dangling/N)·d + (1-d)/N, over a ``contrib`` Column or
+    NumPy vector — one formula for both backends."""
     inv_n = 1.0 / n
-    return (
-        (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling * inv_n))
-        * F.lit(damping) + F.lit((1.0 - damping) * inv_n)
-    )
+    return (contrib + dangling * inv_n) * damping + (1.0 - damping) * inv_n
 
 
 def _advance(state: DataFrame, contribs: DataFrame, new_pr, *carry: str) -> DataFrame:
@@ -345,15 +393,15 @@ class _Fixpoint(Exception):
         self.state, self.record = state, record
 
 
-def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
-             *, checkpoint: CheckpointManager | None, checkpoint_interval: int,
-             resume: bool, max_iter: int, gather: dict,
-             dangling_col: str = "out_deg", l1: float = 0.0):
+def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, local,
+             stop, *, checkpoint: CheckpointManager | None,
+             checkpoint_interval: int, resume: bool, max_iter: int,
+             gather: dict, dangling_col: str = "out_deg", l1: float = 0.0):
     """The power iteration shared by PageRank, personalized and weighted
     PageRank, Katz and eigenvector centrality.
 
-    Each operator supplies only its vertex update; the driver owns the
-    rest.  The state is an (id, pr, prev_pr, ...) table:
+    Each operator supplies only its vertex update, once per backend; the
+    driver owns the rest.  The state is an (id, pr, prev_pr, ...) table:
 
       init()                  -> the iteration-0 state (fresh runs only;
                                  a resumed run reads its latest state).
@@ -361,28 +409,39 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
                                  next UN-TRUNCATED state, given the gather
                                  plan and the dangling mass (Σ pr where
                                  ``dangling_col`` is NULL) of ``state``.
+      local(x, gather, dangling) -> (next pr, extra metrics): the same
+                                 update in NumPy for the local backend.
+                                 ``x`` maps each state column but ``id``
+                                 to a float vector indexed by id (NULL is
+                                 NaN); ``gather(w, value=None)`` is
+                                 Σ w[src] (· the edge column ``value``)
+                                 over each vertex's in-edges.
       stop(l1, prev_l1)       -> bool, checked after each iteration and,
                                  on resume, against the L1 pair the
                                  original run saw.  ``None`` means the
-                                 loop only ends at ``max_iter``; the state
-                                 aggregate then runs on checkpoint
-                                 iterations alone, so such an update must
-                                 not read ``dangling``.
+                                 loop only ends at ``max_iter``; the
+                                 distributed state aggregate then runs on
+                                 checkpoint iterations alone, so such an
+                                 update must not read ``dangling``.
 
     ``l1`` is the delta reported before any iteration has run.  Returns
     ``(state, iterations, final_l1, metrics, stopped)``; ``stopped`` is
     False when the loop ran out of ``max_iter``.
 
-    Lineage truncation is NOT optional: the new state references the
-    old one twice (directly + via the gather), so the logical plan
-    doubles per iteration — by ~iter 30 plan analysis alone OOMs the
-    JVM.  Nor is the durable cadence only for resume: localCheckpoint's
-    LogicalRDD inherits the *estimated* stats of the plan it truncates,
-    which double in bit-length per iteration until stats computation
-    itself is the bottleneck; a parquet write+read every ``interval``
-    iterations resets them to real file sizes.  Without a caller's
-    ``checkpoint`` that cadence writes under a temporary root removed on
-    return.
+    Backend: ``_choose_mode`` picks the local backend (``_run_local``:
+    the whole loop in one task) or a distributed gather plan; every
+    metrics row records the plan and the probe that chose it.
+
+    In the distributed loop lineage truncation is NOT optional: the new
+    state references the old one twice (directly + via the gather), so
+    the logical plan doubles per iteration — by ~iter 30 plan analysis
+    alone OOMs the JVM.  Nor is the durable cadence only for resume:
+    localCheckpoint's LogicalRDD inherits the *estimated* stats of the
+    plan it truncates, which double in bit-length per iteration until
+    stats computation itself is the bottleneck; a parquet write+read
+    every ``interval`` iterations resets them to real file sizes.
+    Without a caller's ``checkpoint`` that cadence writes under a
+    temporary root removed on return.
     """
     spark = edges.sparkSession
     if n == 0:
@@ -397,11 +456,13 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
         ckpt, owned = scope.enter_context(scoped_checkpoint(
             checkpoint, "power_ckpt_", lambda root: CheckpointManager(
                 spark, root, interval=checkpoint_interval)))
+        mode, probe = _choose_mode(out_deg, n, gather)
         # Mode-aware edge layout, built once and amortized over the
         # loop (plan shapes asserted in tests/test_plans.py); its
         # |E|-sized caches are released on every exit path.
-        plan = plan_gather(edges, out_deg, n, **gather)
+        plan = plan_gather(edges, out_deg, n, **{**gather, "mode": mode})
         scope.callback(plan.release)
+        probe = {"plan": plan.mode, **probe}
         # Per-iteration exchanges move the |V|-row state, so they are
         # sized to the loop's tables, not the session's worst case.
         scope.enter_context(sized_shuffle(spark, max(
@@ -426,6 +487,12 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
         else:
             state = init().persist()
 
+        if plan.mode == "local":
+            return _run_local(plan.edges, state, it, l1, local, stop,
+                              ckpt=None if owned else ckpt, n=n,
+                              max_iter=max_iter, dangling_col=dangling_col,
+                              probe=probe)
+
         stopped = durable = False
         while it < max_iter and not stopped:
             it += 1
@@ -434,14 +501,13 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
             try:
                 new_state, m = update(state, plan, dangling)
             except _Fixpoint as fp:
-                new_state, m = fp.state.persist(), fp.record
+                new_state, m = fp.state.persist(), dict(fp.record)
                 l1, durable, stopped = m["l1"], False, True
             else:
                 durable = ckpt.should_checkpoint(it)
                 if durable:
                     new_state = ckpt.write_state(
-                        new_state, it,
-                        target_partitions=min(max(n // 500_000, 1), 2000),
+                        new_state, it, target_partitions=_state_files(n),
                     ).persist()
                 else:
                     # lazy: the truncated RDD materializes inside the
@@ -458,7 +524,8 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
                 m.update(prev_l1=prev_l1,
                          wall_ms=(time.monotonic() - t0) * 1000.0,
                          rows=float(n),
-                         num_partitions=float(new_state.rdd.getNumPartitions()))
+                         num_partitions=float(new_state.rdd.getNumPartitions()),
+                         **probe)
                 metrics.append({"iteration": it, **m})
             if durable:
                 ckpt.write_metrics(it, m)
@@ -470,6 +537,208 @@ def _iterate(edges: DataFrame, out_deg: DataFrame, n: int, init, update, stop,
             state, read_back = state.localCheckpoint(eager=True), state
             read_back.unpersist()
         return state, it, l1, metrics, stopped
+
+
+def _state_files(n: int) -> int:
+    """Files per committed state: ~500k rows each."""
+    return min(max(n // 500_000, 1), 2000)
+
+
+def _local_footprint(num_edges: int, n: int) -> int:
+    """Estimated peak bytes the local kernel adds to its Python worker."""
+    return LOCAL_BYTES_PER_EDGE * num_edges + LOCAL_BYTES_PER_VERTEX * n
+
+
+def _choose_mode(out_deg: DataFrame, n: int, gather: dict) -> tuple[str, dict]:
+    """The gather mode to plan and the probe that chose it.
+
+    "auto" picks ``local`` when no ``salt_threshold`` is given, ``n`` is
+    within ``broadcast_max_vertices`` (a vector that may not be broadcast
+    may not sit in one task either) and ``_local_footprint`` of |E| and
+    ``n`` fits LOCAL_MAX_BYTES; over the budget it picks ``broadcast``.
+    Any other case is ``plan_gather``'s to resolve.  |E| is one
+    aggregate over the persisted degree table, run only for that check:
+    ``num_edges`` and ``est_bytes`` are None whenever it did not run."""
+    mode = gather["mode"]
+    probe = {"num_edges": None, "n": n, "est_bytes": None,
+             "budget_bytes": LOCAL_MAX_BYTES}
+    if (mode == "auto" and gather["salt_threshold"] is None
+            and n <= gather["broadcast_max_vertices"]):
+        num_edges = int(out_deg.agg(F.sum("out_deg")).first()[0] or 0)
+        est = _local_footprint(num_edges, n)
+        probe.update(num_edges=num_edges, est_bytes=est)
+        mode = "local" if est <= LOCAL_MAX_BYTES else "broadcast"
+    return mode, probe
+
+
+def _run_local(edges: DataFrame, state: DataFrame, it: int, l1: float,
+               local, stop, *, ckpt, n: int, max_iter: int,
+               dangling_col: str, probe: dict):
+    """The local backend: iterations ``it+1..max_iter`` in one Spark task
+    each run of ``_local_task``.
+
+    Without a caller's manager (``ckpt`` None) that is one task for the
+    whole loop, and nothing is committed: one task needs no lineage
+    truncation.  With one, each task holds at most ``per_task`` cadence
+    states, as many as fit LOCAL_MAX_BYTES (at least one): a task's
+    states are cached until the driver commits them, so that cache stays
+    within the budget, and a failed task loses only its own resume
+    points.  Every task but the last ends on a committed state, which
+    the next one starts from.  The kernel recomputes a starting state's
+    L1 and dangling mass in NumPy, so a resume is bit-identical to the
+    uninterrupted run within this backend (not across backends: the
+    summation order differs)."""
+    interval = ckpt.interval if ckpt is not None else None
+    per_task = max(LOCAL_MAX_BYTES // (LOCAL_BYTES_PER_CACHED_ROW * n), 1)
+    metrics, stopped = [], False
+    while it < max_iter and not stopped:
+        end = max_iter if interval is None else min(
+            max_iter, (it // interval + per_task) * interval)
+        state, it, stopped, task_metrics = _local_task(
+            edges, state, it, l1, end, local, stop, ckpt=ckpt, n=n,
+            dangling_col=dangling_col, probe=probe)
+        metrics += task_metrics
+    return state, it, metrics[-1]["l1"] if metrics else l1, metrics, stopped
+
+
+def _local_task(edges: DataFrame, state: DataFrame, it: int, l1: float,
+                end: int, local, stop, *, ckpt, n: int, dangling_col: str,
+                probe: dict):
+    """Iterations ``it+1..end`` in ONE Spark task; returns ``(last state,
+    iteration, stopped, metrics)``.
+
+    One ``mapInArrow`` over the edges and ``state``, coalesced to one
+    partition, runs ``_power_kernel``.  The kernel emits every state on
+    ``ckpt``'s cadence as it is produced, the last state, and one
+    metrics row per iteration; the output is cached, and the driver
+    commits the cadence states in order through ``ckpt.write_state`` /
+    ``write_metrics``."""
+    import json
+
+    from pyspark.sql.types import (IntegerType, StringType, StructField,
+                                   StructType)
+
+    cols = state.columns
+    schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in state.schema]
+        + [StructField("iteration", IntegerType(), True),
+           StructField("metrics", StringType(), True)])
+    kernel = functools.partial(
+        _power_kernel, n=n, start=it, l1=l1, max_iter=end,
+        interval=ckpt.interval if ckpt is not None else None,
+        local=local, stop=stop, dangling_col=dangling_col, cols=cols)
+    out = (edges.unionByName(state, allowMissingColumns=True).coalesce(1)
+           .mapInArrow(kernel, schema).persist())
+    try:
+        # The kernel's one job: this collect materializes the cache.
+        rows = out.where(F.col("metrics").isNotNull()) \
+            .select("iteration", "metrics").collect()
+        state.unpersist()
+
+        def state_at(k):
+            return out.where(F.col("id").isNotNull()
+                             & (F.col("iteration") == k)).select(*cols)
+
+        metrics, committed, stopped = [], None, False
+        for row in sorted(rows, key=lambda r: r["iteration"]):
+            m = json.loads(row["metrics"])
+            commit, stopped = m.pop("_commit"), m.pop("_stopped")
+            it = row["iteration"]
+            m.update(rows=float(n), num_partitions=1.0, **probe)
+            metrics.append({"iteration": it, **m})
+            if commit:
+                committed = ckpt.write_state(state_at(it), it,
+                                             target_partitions=_state_files(n))
+                ckpt.write_metrics(it, m)
+        # The last state: its committed read-back, else materialized
+        # off the cache released below.
+        final = committed if commit else state_at(it).localCheckpoint(eager=True)
+        return final, it, stopped, metrics
+    finally:
+        out.unpersist()
+
+
+def _power_kernel(batches, *, n: int, start: int, l1: float, max_iter: int,
+                  interval: int | None, local, stop, dangling_col: str,
+                  cols: list[str]):
+    """``mapInArrow`` body of the local backend (one task).
+
+    Input rows are edges (``id`` NULL) or the state at ``start``.
+    Edges are sorted by (src, dst), so each ``np.bincount`` gather sums
+    in a fixed order.  Keeps the driver's contract: zero dangling mass
+    before step 1 (a resumed state's is recomputed), the stop rule
+    after each update, ``max_iter``, and ``prev_pr`` for Q4.  Yields
+    each state on the ``interval`` cadence as it is produced, the last
+    state, then one (iteration, metrics JSON) row per iteration."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    table = pa.Table.from_batches(list(batches))
+    is_state = pc.is_valid(table["id"])
+    st = table.filter(is_state).select(cols).sort_by("id")
+    et = table.filter(pc.invert(is_state)).drop_columns(cols)
+    del table
+    ids = st["id"].to_numpy()
+    if len(ids) != n or ids[0] != 0 or ids[-1] != n - 1:
+        raise ValueError("the state must hold every id in [0, n) once")
+    src, dst = et["src"].to_numpy(), et["dst"].to_numpy()
+    order = np.lexsort((dst, src))
+    src, dst = src[order], dst[order]
+    edge_cols = {c: et[c].to_numpy()[order] for c in et.column_names
+                 if c not in ("src", "dst")}
+    del et, order
+    x = {c: st[c].to_numpy().astype(np.float64) for c in cols if c != "id"}
+    is_dangling = pc.is_null(st[dangling_col]).to_numpy()
+
+    def gather(w, value=None):
+        v = w[src] if value is None else w[src] * edge_cols[value]
+        return np.bincount(dst, weights=v, minlength=n)
+
+    def state_batch(k):
+        arrays = [pa.array(x[c]) if c in ("pr", "prev_pr")
+                  else st[c].combine_chunks() for c in cols]
+        return pa.RecordBatch.from_arrays(
+            arrays + [pa.array(np.full(n, k, np.int32)), pa.nulls(n, pa.string())],
+            names=cols + ["iteration", "metrics"])
+
+    dangling = 0.0
+    if start > 0:
+        l1 = float(np.abs(x["pr"] - x["prev_pr"]).sum())
+        dangling = float(x["pr"][is_dangling].sum())
+    records, it, stopped, commit = [], start, False, False
+    while it < max_iter and not stopped:
+        it += 1
+        t0 = time.perf_counter()
+        prev_l1 = l1
+        try:
+            pr, m = local(x, gather, dangling)
+        except _Fixpoint as fp:
+            pr, m = fp.state, dict(fp.record)
+            l1, stopped, fixpoint = m["l1"], True, True
+        else:
+            l1 = float(np.abs(pr - x["pr"]).sum())
+            dangling = float(pr[is_dangling].sum())
+            m = {"l1": l1, "dangling_mass": dangling,
+                 "sum_pr": float(pr.sum()), **m}
+            stopped = stop is not None and stop(l1, prev_l1)
+            fixpoint = False
+        x["prev_pr"], x["pr"] = x["pr"], pr
+        commit = bool(interval) and not fixpoint and it % interval == 0
+        m.update(prev_l1=prev_l1, wall_ms=(time.perf_counter() - t0) * 1000.0,
+                 _commit=commit, _stopped=stopped)
+        records.append((it, m))
+        if commit:
+            yield state_batch(it)
+    if not commit:
+        yield state_batch(it)
+    k = len(records)
+    yield pa.RecordBatch.from_arrays(
+        [pa.nulls(k, st.schema.field(c).type) for c in cols]
+        + [pa.array([r[0] for r in records], pa.int32()),
+           pa.array([json.dumps(r[1]) for r in records], pa.string())],
+        names=cols + ["iteration", "metrics"])
 
 
 def _state_agg(state: DataFrame, dangling_col: str = "out_deg") -> dict:

@@ -36,6 +36,7 @@ from pagerank_spark.operators.pagerank import (
     GatherPlan,
     PageRankResult,
     _advance,
+    _contrib,
     _iterate,
     _rank_weights,
 )
@@ -95,18 +96,23 @@ def personalized_pagerank(
                     .alias("restart"))
         )
 
+    def restarted(contrib, dangling: float, restart):
+        # p = d*(gather + dangling*restart) + (1-d)*restart, over
+        # Columns or NumPy vectors alike.
+        return ((contrib + dangling * restart) * damping
+                + (1.0 - damping) * restart)
+
     def update(state: DataFrame, plan: GatherPlan, dangling: float):
-        # p = d*(gather + dangling*restart) + (1-d)*restart
-        new_pr = (
-            (F.coalesce(F.col("contrib"), F.lit(0.0))
-             + F.lit(dangling) * F.col("restart")) * F.lit(damping)
-            + F.lit(1.0 - damping) * F.col("restart")
-        )
+        new_pr = restarted(_contrib(), dangling, F.col("restart"))
         return _advance(state, plan.gather(_rank_weights(state)), new_pr,
                         "out_deg", "restart"), {}
 
+    def local(x, gather, dangling: float):
+        contrib = gather(x["pr"] / x["out_deg"])
+        return restarted(contrib, dangling, x["restart"]), {}
+
     state, it, l1, metrics, _ = _iterate(
-        graph.edges, graph.out_deg, graph.n, init, update,
+        graph.edges, graph.out_deg, graph.n, init, update, local,
         lambda l1, _: l1 < tol,
         checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
         resume=resume, max_iter=max_iter,

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 from pagerank_spark.operators.pagerank import plan_gather
 
 # Broadcast the |V|-row score side below this many vertices — same
@@ -103,13 +103,6 @@ def salsa(
     )
     fwd_e.count()
     rev_e.count()
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="salsa_ckpt_"),
-            interval=checkpoint_interval)
-
     loop_width = fwd_e.rdd.getNumPartitions()
     # Two gather plans, keyed by opposite endpoints, probed against
     # the degree table of their own join key (hits.py's dual-layout
@@ -121,9 +114,11 @@ def salsa(
                       broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     try:
         with static_plan(spark), \
-                sized_shuffle(spark, loop_width):
+                sized_shuffle(spark, loop_width), \
+                scoped_checkpoint(checkpoint, "salsa_ckpt_", lambda root: CheckpointManager(
+                    spark, root, interval=checkpoint_interval)) as (checkpoint, owned):
             return _salsa_loop(spark, fwd, rev, n, tol, max_iter,
-                               checkpoint)
+                               checkpoint, owned)
     finally:
         fwd.release()
         rev.release()
@@ -133,7 +128,7 @@ def salsa(
 
 def _salsa_loop(spark, fwd, rev, n: int,
                 tol: float, max_iter: int,
-                checkpoint: CheckpointManager) -> DataFrame:
+                checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     weighted = F.col("w") * F.col("f")
     state = (
         spark.range(0, n)
@@ -223,4 +218,5 @@ def _salsa_loop(spark, fwd, rev, n: int,
             raw_cached.unpersist()
         if l1 is not None and l1 < tol:
             break
-    return state.select("id", "hub", "auth")
+    durable = it > 0 and checkpoint.should_checkpoint(it)
+    return detach(state, owned, durable).select("id", "hub", "auth")

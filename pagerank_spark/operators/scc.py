@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 
 # |V|-row state sides at or below this bound are broadcast into the
 # cached edge partitions (same bound class as bfs/pagerank).
@@ -76,217 +76,212 @@ def strongly_connected_components(
         n = 0 if row is None or row["m"] is None else int(row["m"]) + 1
     if n == 0:
         return spark.createDataFrame([], "id BIGINT, scc BIGINT")
-    if checkpoint is None:
-        import tempfile
+    with scoped_checkpoint(checkpoint, "scc_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        # Self-loops never split an SCC; drop them.  No dedupe: TRIM is an
+        # existence check, COLOR a min-agg, MARK a distinct — all
+        # duplicate-insensitive (module docstring).
+        active_e = e.where(F.col("src") != F.col("dst")).persist()
+        active_v = spark.range(0, n).localCheckpoint(eager=True)
+        n_active = n
+        assigned = spark.createDataFrame([], "id BIGINT, scc BIGINT")
+        have_assigned = False
+        rnd = 0
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="scc_ckpt_"),
-            interval=checkpoint_interval)
+        def bcast(df, rows):
+            return F.broadcast(df) if rows <= BROADCAST_MAX_STATE else df
 
-    # Self-loops never split an SCC; drop them.  No dedupe: TRIM is an
-    # existence check, COLOR a min-agg, MARK a distinct — all
-    # duplicate-insensitive (module docstring).
-    active_e = e.where(F.col("src") != F.col("dst")).persist()
-    active_v = spark.range(0, n).localCheckpoint(eager=True)
-    n_active = n
-    assigned = spark.createDataFrame([], "id BIGINT, scc BIGINT")
-    have_assigned = False
-    rnd = 0
+        # On-cadence ticks persist the re-read state; track those frames
+        # (GatherPlan._caches style) so each is released once its successor
+        # is cached — otherwise one |V|-row cache accumulates per cadence
+        # hit and survives after the operator returns.  Releasing an older
+        # frame another phase still references only costs a parquet re-read
+        # (write_state already truncated its lineage to the checkpoint).
+        cadence_caches: list[DataFrame] = []
 
-    def bcast(df, rows):
-        return F.broadcast(df) if rows <= BROADCAST_MAX_STATE else df
+        def tick(state_df, extra=None):
+            """Durable cadence shared by every loop below: on-cadence
+            rounds write+read the round's carried state (plan/stats reset
+            + a metrics row); off-cadence rounds lazily truncate so the
+            materialization fuses into the round's convergence aggregate."""
+            nonlocal rnd
+            rnd += 1
+            if checkpoint.should_checkpoint(rnd):
+                out = checkpoint.write_state(state_df, rnd).persist()
+                out.count()    # materialize before dropping predecessors
+                while cadence_caches:
+                    cadence_caches.pop().unpersist()
+                cadence_caches.append(out)
+                checkpoint.write_metrics(
+                    rnd, {"active_vertices": float(n_active), **(extra or {})})
+                return out
+            return state_df.localCheckpoint(eager=False)
 
-    # On-cadence ticks persist the re-read state; track those frames
-    # (GatherPlan._caches style) so each is released once its successor
-    # is cached — otherwise one |V|-row cache accumulates per cadence
-    # hit and survives after the operator returns.  Releasing an older
-    # frame another phase still references only costs a parquet re-read
-    # (write_state already truncated its lineage to the checkpoint).
-    cadence_caches: list[DataFrame] = []
-
-    def tick(state_df, extra=None):
-        """Durable cadence shared by every loop below: on-cadence
-        rounds write+read the round's carried state (plan/stats reset
-        + a metrics row); off-cadence rounds lazily truncate so the
-        materialization fuses into the round's convergence aggregate."""
-        nonlocal rnd
-        rnd += 1
-        if checkpoint.should_checkpoint(rnd):
-            out = checkpoint.write_state(state_df, rnd).persist()
-            out.count()    # materialize before dropping predecessors
-            while cadence_caches:
-                cadence_caches.pop().unpersist()
-            cadence_caches.append(out)
-            checkpoint.write_metrics(
-                rnd, {"active_vertices": float(n_active), **(extra or {})})
-            return out
-        return state_df.localCheckpoint(eager=False)
-
-    def restrict_edges(survivors, srows):
-        """Active edges with BOTH endpoints in ``survivors``."""
-        return (
-            active_e
-            .join(bcast(survivors.withColumnRenamed("id", "src"), srows),
-                  "src", "left_semi")
-            .join(bcast(survivors.withColumnRenamed("id", "dst"), srows),
-                  "dst", "left_semi")
-            .select("src", "dst")
-        )
-
-    # Durable cadence for the SHRINKING EDGE SET, separate from the
-    # state cadence (its own iteration counter — write_state is keyed
-    # by iteration, so sharing `rnd` would collide with state writes).
-    # A persist caches DATA but the restrict plan grows two semi-joins
-    # per peel; a fringe-heavy directed graph trims hundreds of times
-    # and the accumulated plan OOMs driver-side analysis long before
-    # any executor does (observed on the facebook graph — the same
-    # defect the round-3 review found in k_core, fixed there first).
-    import os as _os
-
-    edge_ckpt = CheckpointManager(
-        spark, _os.path.join(checkpoint.root, "edges"),
-        interval=checkpoint.interval)
-    edge_epoch = 0
-
-    def shrink(survivors, srows):
-        nonlocal edge_epoch, active_e
-        edge_epoch += 1
-        nxt = restrict_edges(survivors, srows)
-        if edge_ckpt.should_checkpoint(edge_epoch):
-            nxt = edge_ckpt.write_state(nxt, edge_epoch).persist()
-        else:
-            nxt = nxt.persist()
-        nxt.count()
-        active_e.unpersist()
-        active_e = nxt
-
-    while rnd < max_rounds and n_active > 0:
-        # ---------------- TRIM ----------------
-        while rnd < max_rounds:
-            has_out = active_e.select(F.col("src").alias("id")).distinct()
-            has_in = active_e.select(F.col("dst").alias("id")).distinct()
-            keep = (
-                active_v.join(has_out, "id", "left_semi")
-                .join(has_in, "id", "left_semi")
-                .localCheckpoint(eager=True)    # |V|-row
+        def restrict_edges(survivors, srows):
+            """Active edges with BOTH endpoints in ``survivors``."""
+            return (
+                active_e
+                .join(bcast(survivors.withColumnRenamed("id", "src"), srows),
+                      "src", "left_semi")
+                .join(bcast(survivors.withColumnRenamed("id", "dst"), srows),
+                      "dst", "left_semi")
+                .select("src", "dst")
             )
-            k = keep.count()
-            if k == n_active:
+
+        # Durable cadence for the SHRINKING EDGE SET, separate from the
+        # state cadence (its own iteration counter — write_state is keyed
+        # by iteration, so sharing `rnd` would collide with state writes).
+        # A persist caches DATA but the restrict plan grows two semi-joins
+        # per peel; a fringe-heavy directed graph trims hundreds of times
+        # and the accumulated plan OOMs driver-side analysis long before
+        # any executor does (observed on the facebook graph — the same
+        # defect k_core had, fixed there first).
+        import os as _os
+
+        edge_ckpt = CheckpointManager(
+            spark, _os.path.join(checkpoint.root, "edges"),
+            interval=checkpoint.interval)
+        edge_epoch = 0
+
+        def shrink(survivors, srows):
+            nonlocal edge_epoch, active_e
+            edge_epoch += 1
+            nxt = restrict_edges(survivors, srows)
+            if edge_ckpt.should_checkpoint(edge_epoch):
+                nxt = edge_ckpt.write_state(nxt, edge_epoch).persist()
+            else:
+                nxt = nxt.persist()
+            nxt.count()
+            active_e.unpersist()
+            active_e = nxt
+
+        while rnd < max_rounds and n_active > 0:
+            # ---------------- TRIM ----------------
+            while rnd < max_rounds:
+                has_out = active_e.select(F.col("src").alias("id")).distinct()
+                has_in = active_e.select(F.col("dst").alias("id")).distinct()
+                keep = (
+                    active_v.join(has_out, "id", "left_semi")
+                    .join(has_in, "id", "left_semi")
+                    .localCheckpoint(eager=True)    # |V|-row
+                )
+                k = keep.count()
+                if k == n_active:
+                    break
+                peeled = active_v.join(keep, "id", "left_anti").select(
+                    "id", F.col("id").alias("scc"))
+                assigned = tick(assigned.unionByName(peeled) if have_assigned
+                                else peeled, {"phase": 1.0})
+                have_assigned = True
+                active_v, n_active = keep, k
+                if k == 0:
+                    break
+                shrink(keep, k)
+            if n_active == 0:
                 break
-            peeled = active_v.join(keep, "id", "left_anti").select(
-                "id", F.col("id").alias("scc"))
-            assigned = tick(assigned.unionByName(peeled) if have_assigned
-                            else peeled, {"phase": 1.0})
+
+            # ---------------- COLOR ----------------
+            colors = active_v.select("id", F.col("id").alias("color"))
+            colors = colors.localCheckpoint(eager=True)
+            while rnd < max_rounds:
+                upd = (
+                    active_e.join(
+                        bcast(colors.select(F.col("id").alias("src"),
+                                            F.col("color").alias("c")),
+                              n_active),
+                        "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.min("c").alias("cmin"))
+                )
+                newc = (
+                    colors.join(upd, "id", "left")
+                    .select(
+                        "id",
+                        F.least(F.col("color"),
+                                F.coalesce(F.col("cmin"), F.col("color")))
+                        .alias("color"),
+                        (F.coalesce(F.col("cmin"), F.col("color"))
+                         < F.col("color")).cast("long").alias("chg"))
+                )
+                newc = tick(newc, {"phase": 2.0})
+                changed = int(newc.agg(
+                    F.sum("chg").alias("s")).first()["s"] or 0)
+                colors = newc.select("id", "color")
+                if changed == 0:
+                    break
+
+            # ---------------- MARK ----------------
+            marked = colors.where(F.col("color") == F.col("id"))
+            marked = marked.localCheckpoint(eager=True)      # (id, color)
+            frontier = marked
+            f_rows = marked.count()
+            m_rows = f_rows
+            while f_rows > 0 and rnd < max_rounds:
+                preds = (
+                    active_e.join(
+                        bcast(frontier.select(F.col("id").alias("dst"),
+                                              F.col("color").alias("fc")),
+                              f_rows),
+                        "dst")
+                    .select("src", "fc").distinct()
+                    .join(bcast(colors.select(F.col("id").alias("src"),
+                                              F.col("color").alias("sc")),
+                                n_active),
+                          "src")
+                    .where(F.col("sc") == F.col("fc"))
+                    .select(F.col("src").alias("id"), F.col("fc").alias("color"))
+                    .join(marked, "id", "left_anti")
+                    .localCheckpoint(eager=True)
+                )
+                f_rows = preds.count()
+                if f_rows == 0:
+                    break
+                frontier = preds
+                marked = tick(marked.unionByName(preds), {"phase": 3.0})
+                m_rows += f_rows
+
+            # ---------------- ASSIGN & SHRINK ----------------
+            found = marked.select("id", F.col("color").alias("scc"))
+            assigned = tick(assigned.unionByName(found) if have_assigned
+                            else found, {"phase": 4.0})
             have_assigned = True
-            active_v, n_active = keep, k
-            if k == 0:
-                break
-            shrink(keep, k)
-        if n_active == 0:
-            break
-
-        # ---------------- COLOR ----------------
-        colors = active_v.select("id", F.col("id").alias("color"))
-        colors = colors.localCheckpoint(eager=True)
-        while rnd < max_rounds:
-            upd = (
-                active_e.join(
-                    bcast(colors.select(F.col("id").alias("src"),
-                                        F.col("color").alias("c")),
-                          n_active),
-                    "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("c").alias("cmin"))
-            )
-            newc = (
-                colors.join(upd, "id", "left")
-                .select(
-                    "id",
-                    F.least(F.col("color"),
-                            F.coalesce(F.col("cmin"), F.col("color")))
-                    .alias("color"),
-                    (F.coalesce(F.col("cmin"), F.col("color"))
-                     < F.col("color")).cast("long").alias("chg"))
-            )
-            newc = tick(newc, {"phase": 2.0})
-            changed = int(newc.agg(
-                F.sum("chg").alias("s")).first()["s"] or 0)
-            colors = newc.select("id", "color")
-            if changed == 0:
-                break
-
-        # ---------------- MARK ----------------
-        marked = colors.where(F.col("color") == F.col("id"))
-        marked = marked.localCheckpoint(eager=True)      # (id, color)
-        frontier = marked
-        f_rows = marked.count()
-        m_rows = f_rows
-        while f_rows > 0 and rnd < max_rounds:
-            preds = (
-                active_e.join(
-                    bcast(frontier.select(F.col("id").alias("dst"),
-                                          F.col("color").alias("fc")),
-                          f_rows),
-                    "dst")
-                .select("src", "fc").distinct()
-                .join(bcast(colors.select(F.col("id").alias("src"),
-                                          F.col("color").alias("sc")),
-                            n_active),
-                      "src")
-                .where(F.col("sc") == F.col("fc"))
-                .select(F.col("src").alias("id"), F.col("fc").alias("color"))
-                .join(marked, "id", "left_anti")
+            remaining = (
+                active_v.join(bcast(marked.select("id"), m_rows),
+                              "id", "left_anti")
                 .localCheckpoint(eager=True)
             )
-            f_rows = preds.count()
-            if f_rows == 0:
+            n_active = remaining.count()
+            active_v = remaining
+            if n_active == 0:
                 break
-            frontier = preds
-            marked = tick(marked.unionByName(preds), {"phase": 3.0})
-            m_rows += f_rows
+            shrink(remaining, n_active)
 
-        # ---------------- ASSIGN & SHRINK ----------------
-        found = marked.select("id", F.col("color").alias("scc"))
-        assigned = tick(assigned.unionByName(found) if have_assigned
-                        else found, {"phase": 4.0})
-        have_assigned = True
-        remaining = (
-            active_v.join(bcast(marked.select("id"), m_rows),
-                          "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_active = remaining.count()
-        active_v = remaining
-        if n_active == 0:
-            break
-        shrink(remaining, n_active)
+        active_e.unpersist()
+        if n_active > 0:
+            # The round budget ran out mid-phase.  A silently partial
+            # labeling (vertices missing from the output domain) is worse
+            # than a provisional one: warn loudly and label the remaining
+            # active vertices as singletons so the output domain stays
+            # complete.  These labels are NOT converged SCC labels.
+            import warnings
 
-    active_e.unpersist()
-    if n_active > 0:
-        # The round budget ran out mid-phase.  A silently partial
-        # labeling (vertices missing from the output domain) is worse
-        # than a provisional one: warn loudly and label the remaining
-        # active vertices as singletons so the output domain stays
-        # complete.  These labels are NOT converged SCC labels.
-        import warnings
-
-        warnings.warn(
-            f"strongly_connected_components: max_rounds={max_rounds} "
-            f"exhausted with {n_active} vertices still active; labeling "
-            "them as singleton SCCs (NOT converged — raise max_rounds)",
-            RuntimeWarning, stacklevel=2)
-        leftovers = active_v.select("id", F.col("id").alias("scc"))
-        assigned = (assigned.unionByName(leftovers) if have_assigned
-                    else leftovers)
-        have_assigned = True
-    if not have_assigned:
-        return spark.createDataFrame([], "id BIGINT, scc BIGINT")
-    # Materialize the result so callers never re-trigger the loop's
-    # lineage after the caches above are released.
-    out = assigned.localCheckpoint(eager=True)
-    while cadence_caches:
-        cadence_caches.pop().unpersist()
-    return out
+            warnings.warn(
+                f"strongly_connected_components: max_rounds={max_rounds} "
+                f"exhausted with {n_active} vertices still active; labeling "
+                "them as singleton SCCs (NOT converged — raise max_rounds)",
+                RuntimeWarning, stacklevel=2)
+            leftovers = active_v.select("id", F.col("id").alias("scc"))
+            assigned = (assigned.unionByName(leftovers) if have_assigned
+                        else leftovers)
+            have_assigned = True
+        if not have_assigned:
+            return spark.createDataFrame([], "id BIGINT, scc BIGINT")
+        # Materialize the result so callers never re-trigger the loop's
+        # lineage after the caches above are released.
+        out = assigned.localCheckpoint(eager=True)
+        while cadence_caches:
+            cadence_caches.pop().unpersist()
+        return out
 
 
 def scc_condensation(edges: DataFrame, n: int | None = None,
@@ -375,82 +370,77 @@ def condensation_levels(
     # any data does (observed on the facebook graph).  This derives a
     # NEW truncated frame; a caller-passed table is not disturbed.
     labels = labels.localCheckpoint(eager=True)
-    cond = None
-    try:
-        members = labels.groupBy("scc").agg(
-            F.count(F.lit(1)).alias("n_members"))
-        cond = (
-            scc_condensation(edges, labels=labels)
-            .select(F.col("scc_src").alias("s"),
-                    F.col("scc_dst").alias("d"))
-            .persist()
-        )
-        cond.count()
-        if checkpoint is None:
-            import tempfile
-
-            checkpoint = CheckpointManager(
-                labels.sparkSession,
-                tempfile.mkdtemp(prefix="condlvl_ckpt_"),
-                interval=checkpoint_interval)
-        lvl = members.select("scc", F.lit(0).cast("bigint").alias("level"),
-                             "n_members").localCheckpoint(eager=True)
-        # On-cadence rounds persist the re-read state; track that frame
-        # (same pattern as tick()'s cadence_caches above) so each is
-        # released once its successor is materialized — otherwise one
-        # |SCC|-row cache accumulates per cadence hit and survives
-        # after the operator returns.
-        lvl_cached: DataFrame | None = None
-        prev_sum = 0
-        rnd = 0
-        while True:
-            rnd += 1
-            if rnd > max_rounds:
-                raise RuntimeError(
-                    "condensation_levels: no fixpoint after "
-                    f"{max_rounds} rounds — the label table is not a "
-                    "DAG condensation")
-            from_pred = (
-                cond.join(lvl.select(F.col("scc").alias("s"),
-                                     F.col("level").alias("pl")), "s")
-                .groupBy(F.col("d").alias("scc"))
-                .agg((F.max("pl") + 1).alias("up"))
+    with scoped_checkpoint(checkpoint, "condlvl_ckpt_", lambda root: CheckpointManager(
+            labels.sparkSession, root, interval=checkpoint_interval)) as (checkpoint, _):
+        cond = None
+        try:
+            members = labels.groupBy("scc").agg(
+                F.count(F.lit(1)).alias("n_members"))
+            cond = (
+                scc_condensation(edges, labels=labels)
+                .select(F.col("scc_src").alias("s"),
+                        F.col("scc_dst").alias("d"))
+                .persist()
             )
-            nxt = (
-                lvl.join(from_pred, "scc", "left")
-                .select("scc",
-                        F.greatest(F.col("level"),
-                                   F.coalesce(F.col("up"), F.lit(0)))
-                        .alias("level"),
-                        "n_members")
-            )
-            on_cadence = checkpoint.should_checkpoint(rnd)
-            if on_cadence:
-                nxt = checkpoint.write_state(nxt, rnd).persist()
-            else:
-                nxt = nxt.localCheckpoint(eager=True)
-            s = nxt.agg(F.sum("level").alias("s")).first()["s"] or 0
-            if on_cadence:
-                checkpoint.write_metrics(rnd, {"sum_level": float(s)})
-                # nxt is materialized (the agg above ran); the previous
-                # cadence frame is no longer the live state.
-                if lvl_cached is not None:
-                    lvl_cached.unpersist()
-                lvl_cached = nxt
-            lvl = nxt
-            if s == prev_sum:
-                break
-            prev_sum = s
-        if lvl_cached is not None:
-            # Materialize the result so callers never re-trigger the
-            # loop's lineage after the cache is released.
-            if lvl is lvl_cached:
-                lvl = lvl.localCheckpoint(eager=True)
-            lvl_cached.unpersist()
-        return lvl
-    finally:
-        if cond is not None:
-            cond.unpersist()
+            cond.count()
+            lvl = members.select("scc", F.lit(0).cast("bigint").alias("level"),
+                                 "n_members").localCheckpoint(eager=True)
+            # On-cadence rounds persist the re-read state; track that frame
+            # (same pattern as tick()'s cadence_caches above) so each is
+            # released once its successor is materialized — otherwise one
+            # |SCC|-row cache accumulates per cadence hit and survives
+            # after the operator returns.
+            lvl_cached: DataFrame | None = None
+            prev_sum = 0
+            rnd = 0
+            while True:
+                rnd += 1
+                if rnd > max_rounds:
+                    raise RuntimeError(
+                        "condensation_levels: no fixpoint after "
+                        f"{max_rounds} rounds — the label table is not a "
+                        "DAG condensation")
+                from_pred = (
+                    cond.join(lvl.select(F.col("scc").alias("s"),
+                                         F.col("level").alias("pl")), "s")
+                    .groupBy(F.col("d").alias("scc"))
+                    .agg((F.max("pl") + 1).alias("up"))
+                )
+                nxt = (
+                    lvl.join(from_pred, "scc", "left")
+                    .select("scc",
+                            F.greatest(F.col("level"),
+                                       F.coalesce(F.col("up"), F.lit(0)))
+                            .alias("level"),
+                            "n_members")
+                )
+                on_cadence = checkpoint.should_checkpoint(rnd)
+                if on_cadence:
+                    nxt = checkpoint.write_state(nxt, rnd).persist()
+                else:
+                    nxt = nxt.localCheckpoint(eager=True)
+                s = nxt.agg(F.sum("level").alias("s")).first()["s"] or 0
+                if on_cadence:
+                    checkpoint.write_metrics(rnd, {"sum_level": float(s)})
+                    # nxt is materialized (the agg above ran); the previous
+                    # cadence frame is no longer the live state.
+                    if lvl_cached is not None:
+                        lvl_cached.unpersist()
+                    lvl_cached = nxt
+                lvl = nxt
+                if s == prev_sum:
+                    break
+                prev_sum = s
+            if lvl_cached is not None:
+                # Materialize the result so callers never re-trigger the
+                # loop's lineage after the cache is released.
+                if lvl is lvl_cached:
+                    lvl = lvl.localCheckpoint(eager=True)
+                lvl_cached.unpersist()
+            return lvl
+        finally:
+            if cond is not None:
+                cond.unpersist()
 
 
 def bowtie_regions(edges: DataFrame, n: int | None = None,

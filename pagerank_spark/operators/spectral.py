@@ -39,7 +39,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.operators.pagerank import plan_gather
 from pagerank_spark.graph import symmetrize
 
@@ -86,19 +86,17 @@ def fiedler_vector(
         return (spark.range(0, n)
                 .select("id", F.lit(0.0).alias("fiedler")))
     c = 2 * max_deg                       # exact integer shift
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="fiedler_ckpt_"),
-            interval=checkpoint_interval)
 
     plan = plan_gather(und, deg, n,
                        broadcast_max_vertices=BROADCAST_MAX_VERTICES)
     loop_width = und.rdd.getNumPartitions()
     try:
+        # The loop returns an eagerly checkpointed result: nothing it
+        # returns reads from the manager's root.
         with static_plan(spark), \
-                sized_shuffle(spark, loop_width):
+                sized_shuffle(spark, loop_width), \
+                scoped_checkpoint(checkpoint, "fiedler_ckpt_", lambda root: CheckpointManager(
+                    spark, root, interval=checkpoint_interval)) as (checkpoint, _):
             return _fiedler_loop(spark, plan, deg, n, c, iterations,
                                  checkpoint)
     finally:

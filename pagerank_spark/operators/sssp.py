@@ -30,7 +30,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 
 BROADCAST_MAX_FRONTIER = 5_000_000
 
@@ -56,12 +56,6 @@ def shortest_paths(
     if not isinstance(sources, DataFrame):
         sources = spark.createDataFrame(
             [(int(s),) for s in sources], "id BIGINT")
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="sssp_ckpt_"), interval=8)
-
     w = F.col(weight_col).cast("double").alias("w")
     halves = [edges_w.select("src", "dst", w)]
     if not directed:
@@ -71,13 +65,15 @@ def shortest_paths(
     # Self-loops cannot improve a distance under non-negative weights.
     e = e.where(F.col("src") != F.col("dst")).persist()
     try:
-        return _sssp_loop(e, sources, max_rounds, checkpoint)
+        with scoped_checkpoint(checkpoint, "sssp_ckpt_", lambda root: CheckpointManager(
+                spark, root, interval=8)) as (checkpoint, owned):
+            return _sssp_loop(e, sources, max_rounds, checkpoint, owned)
     finally:
         e.unpersist()
 
 
 def _sssp_loop(e: DataFrame, sources: DataFrame, max_rounds: int,
-               checkpoint: CheckpointManager) -> DataFrame:
+               checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     dists = (
         sources.select(F.col("id").cast("bigint").alias("id"))
         .distinct()
@@ -89,7 +85,7 @@ def _sssp_loop(e: DataFrame, sources: DataFrame, max_rounds: int,
     # arbitrarily large source DataFrame (same fix as bfs._bfs_loop);
     # later rounds get their count from the convergence aggregate.
     frontier_rows = dists.count()
-    laid_out = False
+    laid_out = durable = False
     r = 0
     while r < max_rounds:
         r += 1
@@ -119,14 +115,15 @@ def _sssp_loop(e: DataFrame, sources: DataFrame, max_rounds: int,
                     F.lit(False)).alias("_improved"),
             )
         )
-        if checkpoint.should_checkpoint(r):
+        durable = checkpoint.should_checkpoint(r)
+        if durable:
             merged = checkpoint.write_state(merged, r).persist()
         else:
             merged = merged.localCheckpoint(eager=False)
         row = merged.agg(
             F.sum(F.col("_improved").cast("long")).alias("grew")).first()
         grew = int(row["grew"] or 0)
-        if checkpoint.should_checkpoint(r):
+        if durable:
             checkpoint.write_metrics(r, {"improved": float(grew)})
         frontier.unpersist()
         dists.unpersist()
@@ -139,4 +136,4 @@ def _sssp_loop(e: DataFrame, sources: DataFrame, max_rounds: int,
     frontier.unpersist()
     if laid_out:
         e.unpersist()
-    return dists.select("id", "dist")
+    return detach(dists, owned, durable).select("id", "dist")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 from pagerank_spark.operators.triangles import triangles_per_vertex
 
@@ -104,43 +104,39 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 1000,
                .localCheckpoint(eager=True))
         und.unpersist()
         return out
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="kcore_ckpt_"),
-            interval=checkpoint_interval)
-    cur = und
-    n_prev = None
-    keep = None
-    rnd = 0
-    for _ in range(max_rounds):
-        rnd += 1
-        deg = cur.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("id").localCheckpoint(
-            eager=True)  # |V|-row table: checkpoint cost is fine
-        n = keep.count()
-        if (n_prev is not None and n == n_prev) or n == 0:
+    with scoped_checkpoint(checkpoint, "kcore_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        cur = und
+        n_prev = None
+        keep = None
+        rnd = 0
+        for _ in range(max_rounds):
+            rnd += 1
+            deg = cur.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).alias("deg"))
+            keep = deg.where(F.col("deg") >= k).select("id").localCheckpoint(
+                eager=True)  # |V|-row table: checkpoint cost is fine
+            n = keep.count()
+            if (n_prev is not None and n == n_prev) or n == 0:
+                cur.unpersist()
+                return keep.select("id")
+            n_prev = n
+            nxt = (
+                cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .select("src", "dst")
+            )
+            if checkpoint.should_checkpoint(rnd):
+                # Durable plan reset + per-round lineage/metrics row.
+                nxt = checkpoint.write_state(nxt, rnd).persist()
+                checkpoint.write_metrics(rnd, {"survivors": float(n)})
+            else:
+                nxt = nxt.persist()
+            nxt.count()
             cur.unpersist()
-            return keep.select("id")
-        n_prev = n
-        nxt = (
-            cur.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
-        if checkpoint.should_checkpoint(rnd):
-            # Durable plan reset + per-round lineage/metrics row.
-            nxt = checkpoint.write_state(nxt, rnd).persist()
-            checkpoint.write_metrics(rnd, {"survivors": float(n)})
-        else:
-            nxt = nxt.persist()
-        nxt.count()
+            cur = nxt
         cur.unpersist()
-        cur = nxt
-    cur.unpersist()
-    return keep.select("id")
+        return keep.select("id")
 
 
 def core_decomposition(edges: DataFrame, max_rounds: int = 200,
@@ -175,65 +171,60 @@ def core_decomposition(edges: DataFrame, max_rounds: int = 200,
     Vertices absent from the simple undirected graph (self-loop-only)
     get coreness 0, keeping the output domain = vertices(edges).
     """
-    from pyspark.sql import Window
-
     spark = edges.sparkSession
-    if checkpoint is None:
-        import tempfile
+    with scoped_checkpoint(checkpoint, "coreness_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        from pyspark.sql import Window
 
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="coreness_ckpt_"),
-            interval=checkpoint_interval)
-
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    und = _simple_undirected(edges).persist()
-    cur = (
-        und.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
-    )
-    prev_total = cur.agg(F.sum("c")).first()[0] or 0
-    w = Window.partitionBy("dst").orderBy(F.col("c").desc())
-    for rnd in range(1, max_rounds + 1):
-        grouped = (
-            und.join(cur.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst", "c")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id")))
+            .distinct()
         )
-        nxt = (
-            grouped
-            .select("dst", F.least(F.col("c"), F.sum("n").over(w))
-                    .alias("x"))
-            .groupBy("dst")
-            .agg(F.max("x").alias("c"))
-            .select(F.col("dst").alias("id"), "c")
+        und = _simple_undirected(edges).persist()
+        cur = (
+            und.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+            .persist()
         )
-        if checkpoint.should_checkpoint(rnd):
-            nxt = checkpoint.write_state(nxt, rnd).persist()
-        else:
-            nxt = nxt.persist()
-        total = nxt.agg(F.sum("c")).first()[0] or 0
+        prev_total = cur.agg(F.sum("c")).first()[0] or 0
+        w = Window.partitionBy("dst").orderBy(F.col("c").desc())
+        for rnd in range(1, max_rounds + 1):
+            grouped = (
+                und.join(cur.withColumnRenamed("id", "src"), "src")
+                .groupBy("dst", "c")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            )
+            nxt = (
+                grouped
+                .select("dst", F.least(F.col("c"), F.sum("n").over(w))
+                        .alias("x"))
+                .groupBy("dst")
+                .agg(F.max("x").alias("c"))
+                .select(F.col("dst").alias("id"), "c")
+            )
+            if checkpoint.should_checkpoint(rnd):
+                nxt = checkpoint.write_state(nxt, rnd).persist()
+            else:
+                nxt = nxt.persist()
+            total = nxt.agg(F.sum("c")).first()[0] or 0
+            cur.unpersist()
+            cur = nxt
+            if total == prev_total:
+                break
+            prev_total = total
+            if checkpoint.should_checkpoint(rnd):
+                checkpoint.write_metrics(rnd, {"sum_coreness": float(total)})
+        out = (
+            verts.join(cur, "id", "left")
+            .select("id",
+                    F.coalesce(F.col("c"), F.lit(0)).cast("bigint")
+                    .alias("coreness"))
+            .localCheckpoint(eager=True)  # |V| rows; lets the caches go
+        )
         cur.unpersist()
-        cur = nxt
-        if total == prev_total:
-            break
-        prev_total = total
-        if checkpoint.should_checkpoint(rnd):
-            checkpoint.write_metrics(rnd, {"sum_coreness": float(total)})
-    out = (
-        verts.join(cur, "id", "left")
-        .select("id",
-                F.coalesce(F.col("c"), F.lit(0)).cast("bigint")
-                .alias("coreness"))
-        .localCheckpoint(eager=True)  # |V| rows; lets the caches go
-    )
-    cur.unpersist()
-    und.unpersist()
-    return out
+        und.unpersist()
+        return out
 
 
 def degree_distribution(edges: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
 from pagerank_spark.graph import symmetrize
 from pagerank_spark.operators.triangles import triangles
 
@@ -51,60 +51,56 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 1000,
         out = cur.localCheckpoint(eager=True)
         cur.unpersist()
         return out
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix="truss_ckpt_"),
-            interval=checkpoint_interval)
-    n_prev = cur.count()
-    rnd = 0
-    for _ in range(max_rounds):
-        rnd += 1
-        sym = cur.select(F.col("lo").alias("src"), F.col("hi").alias("dst")) \
-            .unionByName(cur.select(F.col("hi").alias("src"),
-                                    F.col("lo").alias("dst")))
-        round_caches: list = []
-        t = triangles(sym, symmetrized=True, caches=round_caches)
-        # Each triangle supports its three edges; normalize every
-        # projection to the id-canonical (lo < hi) form (the apex `a`
-        # is min by DEGREE order, not id).
-        supp_edges = (
-            t.select(F.least("a", "b").alias("lo"),
-                     F.greatest("a", "b").alias("hi"))
-            .unionByName(t.select(F.least("a", "c").alias("lo"),
-                                  F.greatest("a", "c").alias("hi")))
-            .unionByName(t.select(F.least("b", "c").alias("lo"),
-                                  F.greatest("b", "c").alias("hi")))
-        )
-        strong = (supp_edges.groupBy("lo", "hi")
-                  .agg(F.count(F.lit(1)).alias("supp"))
-                  .where(F.col("supp") >= k - 2)
-                  .select("lo", "hi"))
-        nxt = cur.join(strong, ["lo", "hi"], "left_semi")
-        if checkpoint.should_checkpoint(rnd):
-            nxt = checkpoint.write_state(nxt, rnd).persist()
-        else:
-            # Lineage MUST truncate every round: the round expression
-            # references `cur` four times (symmetrize union, wedge
-            # self-join, closing union, support semi-join), so a
-            # persist-only chain grows the logical plan ~4^rounds and
-            # OOMs the driver on plan analysis alone by round ~8
-            # (observed).  The id-canonical survivor set is |E|/2 rows
-            # and shrinks monotonically, so an RDD localCheckpoint is
-            # cheap here (unlike the |2E| case graph.prepare_prebuilt
-            # documents); lazy so it materializes inside the count.
-            nxt = nxt.localCheckpoint(eager=False)
-        n = nxt.count()
-        while round_caches:
-            round_caches.pop().unpersist()
-        if checkpoint.should_checkpoint(rnd):
-            checkpoint.write_metrics(rnd, {"survivors": float(n)})
+    with scoped_checkpoint(checkpoint, "truss_ckpt_", lambda root: CheckpointManager(
+            spark, root, interval=checkpoint_interval)) as (checkpoint, _):
+        n_prev = cur.count()
+        rnd = 0
+        for _ in range(max_rounds):
+            rnd += 1
+            sym = cur.select(F.col("lo").alias("src"), F.col("hi").alias("dst")) \
+                .unionByName(cur.select(F.col("hi").alias("src"),
+                                        F.col("lo").alias("dst")))
+            round_caches: list = []
+            t = triangles(sym, symmetrized=True, caches=round_caches)
+            # Each triangle supports its three edges; normalize every
+            # projection to the id-canonical (lo < hi) form (the apex `a`
+            # is min by DEGREE order, not id).
+            supp_edges = (
+                t.select(F.least("a", "b").alias("lo"),
+                         F.greatest("a", "b").alias("hi"))
+                .unionByName(t.select(F.least("a", "c").alias("lo"),
+                                      F.greatest("a", "c").alias("hi")))
+                .unionByName(t.select(F.least("b", "c").alias("lo"),
+                                      F.greatest("b", "c").alias("hi")))
+            )
+            strong = (supp_edges.groupBy("lo", "hi")
+                      .agg(F.count(F.lit(1)).alias("supp"))
+                      .where(F.col("supp") >= k - 2)
+                      .select("lo", "hi"))
+            nxt = cur.join(strong, ["lo", "hi"], "left_semi")
+            if checkpoint.should_checkpoint(rnd):
+                nxt = checkpoint.write_state(nxt, rnd).persist()
+            else:
+                # Lineage MUST truncate every round: the round expression
+                # references `cur` four times (symmetrize union, wedge
+                # self-join, closing union, support semi-join), so a
+                # persist-only chain grows the logical plan ~4^rounds and
+                # OOMs the driver on plan analysis alone by round ~8
+                # (observed).  The id-canonical survivor set is |E|/2 rows
+                # and shrinks monotonically, so an RDD localCheckpoint is
+                # cheap here (unlike the |2E| case graph.prepare_prebuilt
+                # documents); lazy so it materializes inside the count.
+                nxt = nxt.localCheckpoint(eager=False)
+            n = nxt.count()
+            while round_caches:
+                round_caches.pop().unpersist()
+            if checkpoint.should_checkpoint(rnd):
+                checkpoint.write_metrics(rnd, {"survivors": float(n)})
+            cur.unpersist()
+            cur = nxt
+            if n == n_prev or n == 0:
+                break
+            n_prev = n
+        out = cur.select("lo", "hi").localCheckpoint(eager=True)
         cur.unpersist()
-        cur = nxt
-        if n == n_prev or n == 0:
-            break
-        n_prev = n
-    out = cur.select("lo", "hi").localCheckpoint(eager=True)
-    cur.unpersist()
-    return out
+        return out

@@ -36,7 +36,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager
+from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
 from pagerank_spark.operators.bfs import BROADCAST_MAX_FRONTIER
 
 
@@ -61,20 +61,18 @@ def random_walks(
     edge.  A walker with no out-neighbor (possible only when
     ``directed=True``) stops early; its later steps are absent.
     """
-    und, starts, checkpoint = _prepare_walk(
-        edges, starts, directed, checkpoint, dedupe=False,
-        ckpt_prefix="walks_ckpt_")
+    und, starts = _prepare_walk(edges, starts, directed, dedupe=False)
     try:
-        return _walk_loop(und, starts, num_steps, checkpoint)
+        with scoped_checkpoint(checkpoint, "walks_ckpt_", lambda root: CheckpointManager(
+                edges.sparkSession, root, interval=8)) as (checkpoint, owned):
+            return _walk_loop(und, starts, num_steps, checkpoint, owned)
     finally:
         und.unpersist()
 
 
-def _prepare_walk(edges: DataFrame, starts, directed: bool,
-                  checkpoint: CheckpointManager | None, dedupe: bool,
-                  ckpt_prefix: str):
-    """Shared walk preamble: (persisted) walk edge set, normalized
-    starts, defaulted checkpoint.  ``dedupe=True`` for loops whose
+def _prepare_walk(edges: DataFrame, starts, directed: bool, dedupe: bool):
+    """Shared walk preamble: (persisted) walk edge set and normalized
+    starts.  ``dedupe=True`` for loops whose
     pick is duplicate-SENSITIVE (node2vec's candidate replication);
     the min-pick loops skip the |2E| dedupe shuffle."""
     spark = edges.sparkSession
@@ -97,16 +95,11 @@ def _prepare_walk(edges: DataFrame, starts, directed: bool,
             [(int(s),) for s in starts], "id BIGINT")
     else:
         starts = starts.select(F.col(starts.columns[0]).alias("id"))
-    if checkpoint is None:
-        import tempfile
-
-        checkpoint = CheckpointManager(
-            spark, tempfile.mkdtemp(prefix=ckpt_prefix), interval=8)
-    return und, starts, checkpoint
+    return und, starts
 
 
 def _walk_loop(und: DataFrame, starts: DataFrame, num_steps: int,
-               checkpoint: CheckpointManager | None) -> DataFrame:
+               checkpoint: CheckpointManager, owned: bool) -> DataFrame:
     heads = (
         starts.select(F.col("id").cast("bigint").alias("walk_id"))
         .distinct()
@@ -116,7 +109,7 @@ def _walk_loop(und: DataFrame, starts: DataFrame, num_steps: int,
     )
     out = heads
     head_rows = heads.count()
-    laid_out = False
+    laid_out = durable = False
     for t in range(1, num_steps + 1):
         small = head_rows <= BROADCAST_MAX_FRONTIER
         if not small and not laid_out:
@@ -137,14 +130,15 @@ def _walk_loop(und: DataFrame, starts: DataFrame, num_steps: int,
                     F.expr("right(key, 12)").cast("bigint").alias("id"))
         )
         merged = out.unionByName(nxt)
-        if checkpoint is not None and checkpoint.should_checkpoint(t):
+        durable = checkpoint.should_checkpoint(t)
+        if durable:
             merged = checkpoint.write_state(merged, t).persist()
         else:
             merged = merged.localCheckpoint(eager=False)
         row = merged.agg(
             F.sum((F.col("step") == t).cast("long")).alias("alive")).first()
         alive = int(row["alive"] or 0)
-        if checkpoint is not None and checkpoint.should_checkpoint(t):
+        if durable:
             checkpoint.write_metrics(t, {"alive": float(alive)})
         heads.unpersist()
         heads = merged.where(F.col("step") == t).persist() if alive else None
@@ -156,7 +150,7 @@ def _walk_loop(und: DataFrame, starts: DataFrame, num_steps: int,
         heads.unpersist()
     if laid_out:
         und.unpersist()
-    return out.select("walk_id", "step", "id")
+    return detach(out, owned, durable).select("walk_id", "step", "id")
 
 
 def node2vec_walks(
@@ -211,12 +205,14 @@ def node2vec_walks(
         raise ValueError("at least one node2vec weight must be positive")
     # dedupe=True is REQUIRED here (not in random_walks): a duplicated
     # edge would be replicated twice and double its candidate mass.
-    und, starts, checkpoint = _prepare_walk(
-        edges, starts, directed, checkpoint, dedupe=True,
-        ckpt_prefix="n2v_ckpt_")
+    und, starts = _prepare_walk(edges, starts, directed, dedupe=True)
     try:
-        return _node2vec_loop(und, starts, num_steps, return_weight,
-                              common_weight, forward_weight, checkpoint)
+        # The loop returns an eagerly checkpointed result: nothing it
+        # returns reads from the manager's root.
+        with scoped_checkpoint(checkpoint, "n2v_ckpt_", lambda root: CheckpointManager(
+                edges.sparkSession, root, interval=8)) as (checkpoint, _):
+            return _node2vec_loop(und, starts, num_steps, return_weight,
+                                  common_weight, forward_weight, checkpoint)
     finally:
         und.unpersist()
 

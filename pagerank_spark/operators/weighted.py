@@ -33,8 +33,9 @@ from pagerank_spark.operators.pagerank import (
     GatherPlan,
     PageRankResult,
     _advance,
+    _contrib,
     _iterate,
-    _teleport_pr,
+    _teleport,
 )
 
 
@@ -115,12 +116,16 @@ def weighted_pagerank(
         ranks_w = state.select(F.col("id").alias("src"),
                                F.col("pr").alias("w"))
         contribs = plan.gather(ranks_w, value=F.col("w") * F.col("f"))
-        return _advance(state, contribs, _teleport_pr(dangling, damping, n),
+        return _advance(state, contribs,
+                        _teleport(_contrib(), dangling, damping, n),
                         "strength"), {}
+
+    def local(x, gather, dangling: float):
+        return _teleport(gather(x["pr"], "f"), dangling, damping, n), {}
 
     try:
         state, it, l1, metrics, _ = _iterate(
-            norm, strength.select("id", "out_deg"), n, init, update,
+            norm, strength.select("id", "out_deg"), n, init, update, local,
             lambda l1, _: l1 < tol,
             checkpoint=checkpoint, checkpoint_interval=checkpoint_interval,
             resume=resume, max_iter=max_iter,

@@ -88,6 +88,23 @@ def sized_shuffle(spark: SparkSession, partitions: int | None):
         spark.conf.set(key, str(prev))
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (``nproc``)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def host_driver_memory() -> str:
+    """Default driver heap: a quarter of the host's physical memory, in
+    whole GiB (at least 1g).  The rest stays for the Python workers and
+    any other JVM on the host: a test run holds its own 8g session while
+    a job it starts runs a second one."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(phys // 4 // 2**30, 1)}g"
+
+
 def get_spark(
     app_name: str = "pagerank_spark",
     master: str | None = None,
@@ -98,7 +115,9 @@ def get_spark(
 
     ``master`` defaults to ``local[N]`` with N from ``SPARK_GRAFT_CPUS``
     (default: all cores).  On a real cluster, pass ``master=None`` and
-    let ``spark-submit`` supply it.
+    let ``spark-submit`` supply it.  The driver heap comes from
+    ``SPARK_DRIVER_MEM``, else :func:`host_driver_memory`; an
+    ``extra_conf`` ``spark.driver.memory`` wins over both.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -118,7 +137,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or host_driver_memory())
         # Iterative drivers re-analyze plans every loop; cap the cost.
         .config("spark.sql.analyzer.maxIterations", "200")
     )

@@ -117,6 +117,9 @@ def test_pagerank_job_end_to_end(spark, tmp_path):
     assert got["iterations"] > 1
     assert got["final_l1"] < 1e-8
     assert got["top_vertex"] is not None
+    # A small graph runs the local backend, within its budget.
+    assert got["plan"] == "local"
+    assert got["est_bytes"] <= got["budget_bytes"]
 
 
 def _build_engine_zip(dest):

@@ -25,15 +25,22 @@ def _ranks(df):
     return {r["id"]: r["katz"] for r in df.collect()}
 
 
+# The power-iteration driver's two backends on a small graph: "auto"
+# picks the one-task local loop, "broadcast" the distributed one.
+BACKENDS = ("local", "broadcast")
+
+
 def test_katz_matches_numpy_oracle(spark):
     g = graph.prepare(edges_df(spark, F2_EDGES))
-    res = katz_centrality(g, alpha=0.1, max_iter=7, tol=0.0)
     want = _katz_numpy(F2_EDGES, g.n, 0.1, 1.0, 7)
-    got = _ranks(res.ranks)
-    assert res.iterations == 7
-    assert set(got) == set(range(g.n))
-    for v in range(g.n):
-        assert got[v] == pytest.approx(want[v], rel=1e-12)
+    for mode in BACKENDS:
+        res = katz_centrality(g, alpha=0.1, max_iter=7, tol=0.0,
+                              gather_mode=mode)
+        got = _ranks(res.ranks)
+        assert res.iterations == 7
+        assert set(got) == set(range(g.n))
+        for v in range(g.n):
+            assert got[v] == pytest.approx(want[v], rel=1e-12)
 
 
 def test_katz_converges_to_fixpoint(spark):
@@ -51,20 +58,24 @@ def test_katz_converges_to_fixpoint(spark):
 
 def test_katz_checkpoint_resume_bit_identical(spark, tmp_path):
     g = graph.prepare(edges_df(spark, F2_EDGES))
+    for mode in BACKENDS:
+        full_ck = CheckpointManager(spark, str(tmp_path / mode / "kfull"),
+                                    interval=1)
+        full = katz_centrality(g, alpha=0.2, tol=0.0, max_iter=18,
+                               checkpoint=full_ck, gather_mode=mode)
 
-    full_ck = CheckpointManager(spark, str(tmp_path / "kfull"), interval=1)
-    full = katz_centrality(g, alpha=0.2, tol=0.0, max_iter=18,
-                           checkpoint=full_ck)
+        part_ck = CheckpointManager(spark, str(tmp_path / mode / "kpart"),
+                                    interval=1)
+        katz_centrality(g, alpha=0.2, tol=0.0, max_iter=8, checkpoint=part_ck,
+                        gather_mode=mode)
+        assert part_ck.latest_iteration() == 8
+        resumed = katz_centrality(g, alpha=0.2, tol=0.0, max_iter=18,
+                                  checkpoint=part_ck, resume=True,
+                                  gather_mode=mode)
 
-    part_ck = CheckpointManager(spark, str(tmp_path / "kpart"), interval=1)
-    katz_centrality(g, alpha=0.2, tol=0.0, max_iter=8, checkpoint=part_ck)
-    assert part_ck.latest_iteration() == 8
-    resumed = katz_centrality(g, alpha=0.2, tol=0.0, max_iter=18,
-                              checkpoint=part_ck, resume=True)
-
-    assert resumed.iterations == full.iterations == 18
-    assert _ranks(full.ranks) == _ranks(resumed.ranks)
-    assert part_ck.committed_iterations() == list(range(1, 19))
+        assert resumed.iterations == full.iterations == 18
+        assert _ranks(full.ranks) == _ranks(resumed.ranks)
+        assert part_ck.committed_iterations() == list(range(1, 19))
 
 
 def test_katz_empty_graph(spark):

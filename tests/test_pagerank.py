@@ -18,6 +18,11 @@ def _ranks_dict(df):
     return {r["id"]: r["pr"] for r in df.collect()}
 
 
+# The power-iteration driver's two backends on a small graph: "auto"
+# picks the one-task local loop, "broadcast" the distributed one.
+BACKENDS = ("local", "broadcast")
+
+
 # FIXTURES.md F2 goldens (exact reference semantics, pre-swap vector).
 F2_GOLDEN_L1 = {
     0: 0.214201109530419, 1: 0.15744966015736, 2: 0.347733931598026,
@@ -111,7 +116,8 @@ def test_random_graph_vs_oracle(spark):
         [ranks[v] for v in sorted(ranks)], oracle_rep, atol=1e-8)
 
 
-def test_sf001_reference_parity(spark):
+@pytest.mark.parametrize("mode", ["auto", "broadcast"])
+def test_sf001_reference_parity(spark, mode):
     # Reference parity on data that is always present (the ego-Facebook
     # golden in test_facebook_golden.py skips without the reference
     # checkout): the driver's supplier→customer graph at sf0.01
@@ -135,7 +141,8 @@ def test_sf001_reference_parity(spark):
     import __spark_entry__ as driver
 
     g = graph.prepare(driver._edges(spark, SF001))
-    res = pagerank(g, tol=1e-10)
+    res = pagerank(g, tol=1e-10, gather_mode=mode)
+    assert res.metrics[0]["plan"] == ("local" if mode == "auto" else mode)
     assert g.n == n
     assert res.iterations == want_it
     assert res.final_l1 < 1e-10
@@ -165,7 +172,8 @@ def test_max_iter_exit_reports_post_swap(spark):
     assert _ranks_dict(conv.ranks) != _ranks_dict(conv.converged_ranks)
 
 
-def test_checkpoint_resume_bit_identical(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["local", "broadcast"])
+def test_checkpoint_resume_bit_identical(spark, tmp_path, mode):
     # FIXTURES F5 shape, capped at a fixed horizon to keep the suite
     # fast: interrupt at iteration 12, resume, compare the iterate at
     # 30 bit-for-bit with the uninterrupted run's.
@@ -173,12 +181,14 @@ def test_checkpoint_resume_bit_identical(spark, tmp_path):
     g = graph.prepare(edges_df(spark, edges))
 
     full_ck = CheckpointManager(spark, str(tmp_path / "full"), interval=1)
-    full = pagerank(g, tol=1e-10, max_iter=18, checkpoint=full_ck)
+    full = pagerank(g, tol=1e-10, max_iter=18, checkpoint=full_ck,
+                    gather_mode=mode)
 
     part_ck = CheckpointManager(spark, str(tmp_path / "part"), interval=1)
-    pagerank(g, tol=1e-10, max_iter=8, checkpoint=part_ck)
+    pagerank(g, tol=1e-10, max_iter=8, checkpoint=part_ck, gather_mode=mode)
     assert part_ck.latest_iteration() == 8
-    resumed = pagerank(g, tol=1e-10, max_iter=18, checkpoint=part_ck, resume=True)
+    resumed = pagerank(g, tol=1e-10, max_iter=18, checkpoint=part_ck,
+                       resume=True, gather_mode=mode)
 
     assert resumed.iterations == full.iterations == 18
     a = _ranks_dict(full.ranks)
@@ -216,7 +226,8 @@ def test_checkpoint_hadoop_fs_uri_root(spark, tmp_path):
     assert ck.committed_iterations() == []
 
 
-def test_resume_stop_check_recovers_prior_l1(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["local", "broadcast"])
+def test_resume_stop_check_recovers_prior_l1(spark, tmp_path, mode):
     # The reference stop rule's plateau branch compares successive L1
     # values; a resumed run must recover the prior iteration's L1 from
     # the metrics log instead of silently skipping the branch.
@@ -227,12 +238,13 @@ def test_resume_stop_check_recovers_prior_l1(spark, tmp_path):
 
     g = graph.prepare(edges_df(spark, F2_EDGES))
     ck = CheckpointManager(spark, str(tmp_path / "ref"), interval=5)
-    full = pagerank(g, stop_rule="reference", checkpoint=ck)
+    full = pagerank(g, stop_rule="reference", checkpoint=ck, gather_mode=mode)
     assert full.iterations == 61
     # the committed metrics expose the prior L1 the resume-time stop
     # check recovers (iteration 60 is on the interval-5 cadence)
     assert ck.read_metric(60, "l1") == full.metrics[59]["l1"]
-    resumed = pagerank(g, stop_rule="reference", checkpoint=ck, resume=True)
+    resumed = pagerank(g, stop_rule="reference", checkpoint=ck, resume=True,
+                       gather_mode=mode)
     assert resumed.iterations == full.iterations
     assert _ranks_dict(resumed.ranks) == _ranks_dict(full.ranks)
 
@@ -261,14 +273,15 @@ def test_ppr_matches_numpy_oracle(spark):
     rng = random.Random(5)
     edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(120)})
     g = graph.prepare(edges_df(spark, edges))
-    res = personalized_pagerank(g, [0, 7], tol=1e-10)
     want, want_it, _ = ppr_oracle(edges, [0, 7], tol=1e-10)
-    got = _ranks_dict(res.ranks)
-    assert res.iterations == want_it
-    assert np.allclose([got[i] for i in range(g.n)], want, atol=1e-9)
-    # mass conservation: dangling re-injection through the restart
-    # distribution keeps the walk normalized at convergence.
-    assert abs(sum(got.values()) - 1.0) < 1e-8
+    for mode in BACKENDS:
+        res = personalized_pagerank(g, [0, 7], tol=1e-10, gather_mode=mode)
+        got = _ranks_dict(res.ranks)
+        assert res.iterations == want_it
+        assert np.allclose([got[i] for i in range(g.n)], want, atol=1e-9)
+        # mass conservation: dangling re-injection through the restart
+        # distribution keeps the walk normalized at convergence.
+        assert abs(sum(got.values()) - 1.0) < 1e-8
 
 
 def test_ppr_localizes_mass(spark):
@@ -310,9 +323,11 @@ def test_weighted_matches_numpy_oracle(spark):
     edges = [(rng.randrange(30), rng.randrange(30), float(rng.randrange(1, 6)))
              for _ in range(90)]
     df = spark.createDataFrame(edges, "src BIGINT, dst BIGINT, weight DOUBLE")
-    got = _ranks_dict(weighted_pagerank(df, tol=1e-10).ranks)
     want, _, _ = weighted_pagerank_oracle(edges, tol=1e-10)
-    assert np.allclose([got[i] for i in range(len(want))], want, atol=1e-9)
+    for mode in BACKENDS:
+        got = _ranks_dict(weighted_pagerank(df, tol=1e-10,
+                                            gather_mode=mode).ranks)
+        assert np.allclose([got[i] for i in range(len(want))], want, atol=1e-9)
 
 
 def test_weighted_uniform_equals_unweighted(spark):
@@ -345,7 +360,8 @@ def test_weighted_parallel_edges_sum(spark):
     assert a == b
 
 
-def test_ppr_checkpoint_resume_bit_identical(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["local", "broadcast"])
+def test_ppr_checkpoint_resume_bit_identical(spark, tmp_path, mode):
     # Mirror of test_checkpoint_resume_bit_identical for the PPR loop:
     # interrupt at iteration 8, resume to 18, compare bit-for-bit with
     # the uninterrupted run (the checkpointed state carries the restart
@@ -356,13 +372,15 @@ def test_ppr_checkpoint_resume_bit_identical(spark, tmp_path):
 
     full_ck = CheckpointManager(spark, str(tmp_path / "pfull"), interval=1)
     full = personalized_pagerank(g, [0], tol=1e-10, max_iter=18,
-                                 checkpoint=full_ck)
+                                 checkpoint=full_ck, gather_mode=mode)
 
     part_ck = CheckpointManager(spark, str(tmp_path / "ppart"), interval=1)
-    personalized_pagerank(g, [0], tol=1e-10, max_iter=8, checkpoint=part_ck)
+    personalized_pagerank(g, [0], tol=1e-10, max_iter=8, checkpoint=part_ck,
+                          gather_mode=mode)
     assert part_ck.latest_iteration() == 8
     resumed = personalized_pagerank(g, [0], tol=1e-10, max_iter=18,
-                                    checkpoint=part_ck, resume=True)
+                                    checkpoint=part_ck, resume=True,
+                                    gather_mode=mode)
 
     assert resumed.iterations == full.iterations == 18
     assert _ranks_dict(full.ranks) == _ranks_dict(resumed.ranks)
@@ -387,20 +405,26 @@ def test_weighted_checkpoint_resume_bit_identical(spark, tmp_path):
     ew = edges_df(spark, F2_EDGES).withColumn(
         "weight", (F.col("dst") % 4 + 1).cast("double"))
 
-    full_ck = CheckpointManager(spark, str(tmp_path / "wfull"), interval=1)
-    full = weighted_pagerank(ew, tol=1e-10, max_iter=18, checkpoint=full_ck)
+    for mode in BACKENDS:
+        full_ck = CheckpointManager(spark, str(tmp_path / mode / "wfull"),
+                                    interval=1)
+        full = weighted_pagerank(ew, tol=1e-10, max_iter=18,
+                                 checkpoint=full_ck, gather_mode=mode)
 
-    part_ck = CheckpointManager(spark, str(tmp_path / "wpart"), interval=1)
-    weighted_pagerank(ew, tol=1e-10, max_iter=8, checkpoint=part_ck)
-    assert part_ck.latest_iteration() == 8
-    resumed = weighted_pagerank(ew, tol=1e-10, max_iter=18,
-                                checkpoint=part_ck, resume=True)
+        part_ck = CheckpointManager(spark, str(tmp_path / mode / "wpart"),
+                                    interval=1)
+        weighted_pagerank(ew, tol=1e-10, max_iter=8, checkpoint=part_ck,
+                          gather_mode=mode)
+        assert part_ck.latest_iteration() == 8
+        resumed = weighted_pagerank(ew, tol=1e-10, max_iter=18,
+                                    checkpoint=part_ck, resume=True,
+                                    gather_mode=mode)
 
-    assert resumed.iterations == full.iterations == 18
-    assert _ranks_dict(full.ranks) == _ranks_dict(resumed.ranks)
-    assert part_ck.committed_iterations() == list(range(1, 19))
-    # metrics carry the shared schema (l1 / dangling_mass / sum_pr)
-    assert part_ck.read_metric(18, "sum_pr") is not None
+        assert resumed.iterations == full.iterations == 18
+        assert _ranks_dict(full.ranks) == _ranks_dict(resumed.ranks)
+        assert part_ck.committed_iterations() == list(range(1, 19))
+        # metrics carry the shared schema (l1 / dangling_mass / sum_pr)
+        assert part_ck.read_metric(18, "sum_pr") is not None
 
 
 def test_weighted_result_metrics_and_iterations(spark):

@@ -58,15 +58,21 @@ def _eranks(df):
     return {r["id"]: r["eigen"] for r in df.collect()}
 
 
+# The power-iteration driver's two backends on a small graph: "auto"
+# picks the one-task local loop, "broadcast" the distributed one.
+BACKENDS = ("local", "broadcast")
+
+
 def test_eigen_matches_numpy_oracle(spark):
     g = graph.prepare(edges_df(spark, F2_EDGES))
-    res = eigenvector_centrality(g, max_iter=7, tol=0.0)
     want = _eigen_numpy(F2_EDGES, g.n, 7)
-    got = _eranks(res.ranks)
-    assert res.iterations == 7
-    assert set(got) == set(range(g.n))
-    for v in range(g.n):
-        assert got[v] == pytest.approx(want[v], rel=1e-12, abs=1e-15)
+    for mode in BACKENDS:
+        res = eigenvector_centrality(g, max_iter=7, tol=0.0, gather_mode=mode)
+        got = _eranks(res.ranks)
+        assert res.iterations == 7
+        assert set(got) == set(range(g.n))
+        for v in range(g.n):
+            assert got[v] == pytest.approx(want[v], rel=1e-12, abs=1e-15)
 
 
 def test_eigen_converges_unit_norm(spark):
@@ -86,16 +92,21 @@ def test_eigen_converges_unit_norm(spark):
 
 def test_eigen_checkpoint_resume_bit_identical(spark, tmp_path):
     g = graph.prepare(edges_df(spark, F2_EDGES))
-    full_ck = CheckpointManager(spark, str(tmp_path / "efull"), interval=1)
-    full = eigenvector_centrality(g, tol=0.0, max_iter=14,
-                                  checkpoint=full_ck)
-    part_ck = CheckpointManager(spark, str(tmp_path / "epart"), interval=1)
-    eigenvector_centrality(g, tol=0.0, max_iter=6, checkpoint=part_ck)
-    assert part_ck.latest_iteration() == 6
-    resumed = eigenvector_centrality(g, tol=0.0, max_iter=14,
-                                     checkpoint=part_ck, resume=True)
-    assert resumed.iterations == full.iterations == 14
-    assert _eranks(full.ranks) == _eranks(resumed.ranks)
+    for mode in BACKENDS:
+        full_ck = CheckpointManager(spark, str(tmp_path / mode / "efull"),
+                                    interval=1)
+        full = eigenvector_centrality(g, tol=0.0, max_iter=14,
+                                      checkpoint=full_ck, gather_mode=mode)
+        part_ck = CheckpointManager(spark, str(tmp_path / mode / "epart"),
+                                    interval=1)
+        eigenvector_centrality(g, tol=0.0, max_iter=6, checkpoint=part_ck,
+                               gather_mode=mode)
+        assert part_ck.latest_iteration() == 6
+        resumed = eigenvector_centrality(g, tol=0.0, max_iter=14,
+                                         checkpoint=part_ck, resume=True,
+                                         gather_mode=mode)
+        assert resumed.iterations == full.iterations == 14
+        assert _eranks(full.ranks) == _eranks(resumed.ranks)
 
 
 def test_eigen_empty_graph(spark):
@@ -110,10 +121,12 @@ def test_eigen_sink_chain_hits_zero_fixpoint(spark):
     # sums only zeros, so the all-zero vector is the fixpoint and the
     # loop must stop on the zero-norm branch, not divide by zero.
     g = graph.prepare(edges_df(spark, [(1, 0)]))
-    res = eigenvector_centrality(g, max_iter=10, tol=0.0)
-    got = _eranks(res.ranks)
-    assert res.iterations == 2
-    assert got == {0: 0.0, 1: 0.0}
+    for mode in BACKENDS:
+        res = eigenvector_centrality(g, max_iter=10, tol=0.0,
+                                     gather_mode=mode)
+        got = _eranks(res.ranks)
+        assert res.iterations == 2
+        assert got == {0: 0.0, 1: 0.0}
 
 
 # --------------------------------------------------------- closeness

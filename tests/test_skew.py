@@ -94,7 +94,7 @@ def test_pagerank_salted_equals_unsalted(spark, hub_graph):
     # fixed 20-iteration horizon: equivalence of the salted plan is
     # exact at every iterate, so a full convergence run adds nothing.
     g = hub_graph
-    base = pagerank(g, max_iter=20)
+    base = pagerank(g, max_iter=20, gather_mode="broadcast")
     salted = pagerank(g, max_iter=20, salt_threshold=50, num_salts=8)
     assert base.iterations == salted.iterations
     a = {r["id"]: r["pr"] for r in base.ranks.collect()}
@@ -131,7 +131,8 @@ def test_ppr_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
     # skew defence) and reproduce the broadcast iterates bit-for-bit.
     from pagerank_spark.operators import ppr as ppr_mod
 
-    base = ppr_mod.personalized_pagerank(hub_graph, [0], max_iter=10)
+    base = ppr_mod.personalized_pagerank(hub_graph, [0], max_iter=10,
+                                         gather_mode="broadcast")
     modes = _spy_modes(monkeypatch)
     auto = ppr_mod.personalized_pagerank(hub_graph, [0], max_iter=10,
                                          broadcast_max_vertices=0)
@@ -148,7 +149,7 @@ def test_weighted_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
 
     ew = hub_graph.edges.withColumn(
         "weight", (F.col("src") % 3 + 1).cast("double"))
-    base = w_mod.weighted_pagerank(ew, max_iter=10)
+    base = w_mod.weighted_pagerank(ew, max_iter=10, gather_mode="broadcast")
     modes = _spy_modes(monkeypatch)
     auto = w_mod.weighted_pagerank(ew, max_iter=10,
                                    broadcast_max_vertices=0)
@@ -164,7 +165,7 @@ def test_katz_auto_salted_equals_broadcast(spark, hub_graph, monkeypatch):
     from pagerank_spark.operators import katz as katz_mod
 
     base = katz_mod.katz_centrality(hub_graph, alpha=0.001, max_iter=6,
-                                    tol=0.0)
+                                    tol=0.0, gather_mode="broadcast")
     modes = _spy_modes(monkeypatch)
     auto = katz_mod.katz_centrality(hub_graph, alpha=0.001, max_iter=6,
                                     tol=0.0, broadcast_max_vertices=0)
