@@ -54,6 +54,16 @@ def detach(df: DataFrame, owned: bool, durable: bool) -> DataFrame:
     return df.localCheckpoint(eager=True) if owned and durable else df
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist ``df``, and the RDD a ``localCheckpoint`` truncated it
+    to: ``DataFrame.unpersist`` alone leaves that RDD's blocks pinned
+    until the JVM happens to collect it.  Nothing may read ``df`` after."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class _PathOps:
     """Filesystem adapter for the checkpoint root.
 

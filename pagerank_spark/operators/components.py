@@ -22,14 +22,42 @@ Each step is: groupBy-min (partial agg) + broadcast/shuffle hash join
 + filter — no collect of edge data to the driver.  Convergence is
 detected with a constant-size aggregate (count + order-insensitive
 xxhash64 checksum of the edge set), one driver collect per round.
+
+Physical strategy:
+    - local (``_components_local``): when the graph fits one task, the
+      whole loop runs in one ``mapInArrow`` task over ``edges.coalesce(1)``
+      (``local_backend.run_one_task``), a NumPy replay of the same rounds
+      (``_star_round``).  Selection: ``local_backend.edge_list_probe``,
+      one aggregate over the input — integral ``src``/``dst``, no NULL
+      endpoint, and 240 B·|E| + 48 B·2|E| within LOCAL_MAX_BYTES.  An
+      input with a NULL endpoint runs distributed, unchanged.
+    - Contracts of the local path: the same rounds and edge sets, the
+      same stop (a round's edge set equals the one before it), the same
+      labels for every ``max_iter``, truncated runs included.  A caller's
+      cadence commits the same states and metrics rows (iteration,
+      ``edges``, ``wall_ms``, ``plan`` and the probe) as the distributed
+      loop, so a run resumes on either backend, bit-identically.
+      Without a caller's checkpoint nothing is committed.
+    - distributed (``_components``): the rounds above, one eager
+      ``localCheckpoint`` (or a durable state on the cadence) each.
+    - Both backends materialise the result once and release every cache
+      they made.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import functools
+import time
 
-from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
+import numpy as np
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField
+
+from pagerank_spark import local_backend
+from pagerank_spark.checkpoint import (CheckpointManager, release,
+                                       scoped_checkpoint)
 from pagerank_spark.graph import symmetrize
+from pagerank_spark.local_backend import sort_pairs
 
 
 def _min_neighbor(edges: DataFrame) -> DataFrame:
@@ -102,30 +130,35 @@ def connected_components(
     Callers that follow the reference's dense-domain semantics should
     union in isolated ids labelled by themselves (see
     ``components_with_domain``).
+
+    The result is materialised (eager ``localCheckpoint``) and the call
+    leaves no other cache behind.
     """
     spark = edges.sparkSession
+    local, probe = local_backend.edge_list_probe(edges)
     # Durable truncation cadence — see operators/pagerank.py for why
     # localCheckpoint alone is insufficient (stats-estimate blowup).
     with scoped_checkpoint(checkpoint, "cc_ckpt_", lambda root: CheckpointManager(
             spark, root, interval=8)) as (checkpoint, owned):
-        return _components(spark, edges, max_iter, checkpoint, owned, resume)
+        start, state = 0, None
+        if resume and checkpoint.latest_iteration() is not None:
+            start = checkpoint.latest_iteration()
+            state = checkpoint.read_state(start)
+        if local:
+            return _components_local(edges, state, start, max_iter,
+                                     None if owned else checkpoint, probe)
+        return _components(spark, edges, state, start, max_iter, checkpoint,
+                           probe)
 
 
-def _components(spark, edges: DataFrame, max_iter: int,
-                checkpoint: CheckpointManager, owned: bool,
-                resume: bool) -> DataFrame:
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+def _components(spark, edges: DataFrame, state: DataFrame | None, it: int,
+                max_iter: int, checkpoint: CheckpointManager,
+                probe: dict) -> DataFrame:
+    vertices = _vertex_ids(edges).persist()
 
-    if resume and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        cur = checkpoint.read_state(it).persist()
+    if state is not None:
+        cur = state.persist()
     else:
-        it = 0
         # Initial symmetrization WITHOUT dedupe: on a dense multigraph
         # the |2E|-row dropDuplicates is the single biggest shuffle of
         # the whole run, and it buys nothing — the per-vertex min
@@ -156,10 +189,10 @@ def _components(spark, edges: DataFrame, max_iter: int,
         min(shuffle_parts, prev_sig[0] // EDGES_PER_PARTITION + 1),
         min(8, shuffle_parts),
     )
-    durable = False
     with sized_shuffle(spark, loop_width):
         while it < max_iter:
             it += 1
+            t0 = time.monotonic()
             ls = _large_star(cur)
             # large-star's output is already (hi, lo)-oriented and
             # small-star re-orients internally, so it consumes ls
@@ -174,31 +207,136 @@ def _components(spark, edges: DataFrame, max_iter: int,
                 # Truncate lineage each round (plan doubles per round).
                 nxt = nxt.localCheckpoint(eager=True)
             sig = _edge_checksum(nxt)
-            cur.unpersist()
+            release(cur)
             cur = nxt
             if durable:
                 checkpoint.write_metrics(
                     it, {"edges": float(sig[0]),
-                         "checksum": float(sig[1] % 2**31)})
+                         "wall_ms": (time.monotonic() - t0) * 1000.0,
+                         **probe})
             if sig == prev_sig:
                 break
             prev_sig = sig
-    if owned and durable:
-        # The last edge set was read back from the temporary root.
-        cur, read_back = cur.localCheckpoint(eager=True), cur
-        read_back.unpersist()
 
-    # At the fixpoint the (hi→lo) orientation is a star forest: every
-    # non-root points directly at its component min.
-    labels = (
-        cur.select(F.greatest("src", "dst").alias("id"),
-                   F.least("src", "dst").alias("component"))
-        .groupBy("id").agg(F.min("component").alias("component"))
-    )
+        # At the fixpoint the (hi→lo) orientation is a star forest:
+        # every non-root points directly at its component min.
+        labels = (
+            cur.select(F.greatest("src", "dst").alias("id"),
+                       F.least("src", "dst").alias("component"))
+            .groupBy("id").agg(F.min("component").alias("component"))
+        )
+        out = (
+            vertices.join(labels, "id", "left")
+            .select("id", F.coalesce("component", "id").alias("component"))
+            .localCheckpoint(eager=True)
+        )
+    release(vertices)
+    release(cur)
+    return out
+
+
+def _vertex_ids(edges: DataFrame) -> DataFrame:
     return (
-        vertices.join(labels, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
     )
+
+
+def _components_local(edges: DataFrame, state: DataFrame | None, start: int,
+                      max_iter: int, ckpt: CheckpointManager | None,
+                      probe: dict) -> DataFrame:
+    """The whole loop in one task (``_components_kernel``); commits the
+    states on ``ckpt``'s cadence, if a caller's manager is given."""
+    id_type = _vertex_ids(edges).schema["id"].dataType
+    inputs = edges.select("src", "dst").withColumn("state", F.lit(False))
+    if state is not None:
+        inputs = inputs.unionByName(
+            state.select("src", "dst").withColumn("state", F.lit(True)))
+    fields = [StructField(c, id_type) for c in ("src", "dst", "id",
+                                                  "component")]
+    kernel = functools.partial(
+        _components_kernel, start=start, max_iter=max_iter,
+        interval=ckpt.interval if ckpt is not None else None)
+    out, _, _ = local_backend.run_one_task(
+        inputs, kernel, fields, state_cols=["src", "dst"],
+        result_cols=["id", "component"], ckpt=ckpt, record=probe)
+    return out
+
+
+def _components_kernel(table, records, *, start: int, max_iter: int,
+                       interval: int | None):
+    """NumPy replay of ``_components``' rounds: the same large-star /
+    small-star edge sets, the same stop (a round's edge set equals the
+    one before it; the distributed loop compares a 64-bit digest of it)
+    and the same labels from the last edge set."""
+    import pyarrow.compute as pc
+
+    raw = table.filter(pc.invert(table["state"]))
+    st = table.filter(table["state"])
+    src, dst = (raw[c].to_numpy().astype(np.int64) for c in ("src", "dst"))
+    ids = np.unique(np.concatenate([src, dst]))
+    if start == 0:
+        # The distributed loop's initial edge multiset: both
+        # orientations, self-loops dropped, duplicates kept.
+        s, d = np.concatenate([src, dst]), np.concatenate([dst, src])
+        keep = s != d
+        s, d = sort_pairs(s[keep], d[keep])
+    else:
+        s, d = sort_pairs(*(st[c].to_numpy().astype(np.int64)
+                             for c in ("src", "dst")))
+    del raw, st, src, dst
+    it, stopped = start, False
+    while it < max_iter and not stopped:
+        it += 1
+        t0 = time.perf_counter()
+        ns, nd = _star_round(s, d)
+        stopped = np.array_equal(ns, s) and np.array_equal(nd, d)
+        s, d = ns, nd
+        commit = bool(interval) and it % interval == 0
+        records.append((it, {"edges": float(s.size),
+                             "wall_ms": (time.perf_counter() - t0) * 1000.0,
+                             "_commit": commit, "_stopped": stopped}))
+        if commit:
+            yield it, {"src": s, "dst": d}
+    # Labels as _components reads them off the last edge set.
+    hi, lo = np.maximum(s, d), np.minimum(s, d)
+    hi, lo = _group_min(hi, lo)
+    component = ids.copy()
+    component[np.searchsorted(ids, hi)] = lo
+    yield None, {"id": ids, "component": component}
+
+
+def _group_min(key: np.ndarray, val: np.ndarray):
+    """(distinct keys, min ``val`` per key)."""
+    key, val = sort_pairs(key, val)
+    first = np.r_[True, key[1:] != key[:-1]] if key.size else key.astype(bool)
+    return key[first], val[first]
+
+
+def _star_round(s: np.ndarray, d: np.ndarray):
+    """One round of ``_components``: large-star, small-star, symmetrize.
+    ``(s, d)`` is the symmetric edge list sorted by (s, d); so is the
+    result, which is duplicate-free."""
+    # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v ∈ N(u), v > u.
+    keys, m = _group_min(s, d)
+    m_u = np.minimum(m, keys)[np.searchsorted(keys, s)]
+    keep = d > s
+    ls_src, ls_dst = d[keep], m_u[keep]
+    keep = ls_src != ls_dst
+    ls_src, ls_dst = ls_src[keep], ls_dst[keep]
+    # small-star over (hi, lo) pairs: m(hi) = min(lo-set ∪ {hi}); emit
+    # (lo, m) for each lo and (hi, m), v ≠ m.
+    hi, lo = sort_pairs(np.maximum(ls_src, ls_dst),
+                         np.minimum(ls_src, ls_dst), unique=True)
+    keys, m = _group_min(hi, lo)
+    m = np.minimum(m, keys)
+    out_s = np.concatenate([lo, keys])
+    out_d = np.concatenate([m[np.searchsorted(keys, hi)], m])
+    keep = out_s != out_d
+    out_s, out_d = out_s[keep], out_d[keep]
+    return sort_pairs(np.concatenate([out_s, out_d]),
+                       np.concatenate([out_d, out_s]), unique=True)
 
 
 def components_with_domain(edges: DataFrame, n: int) -> DataFrame:

@@ -14,29 +14,56 @@ count → per-dst argmax via max_by on a (count, -label) ordering —
 partial-aggregatable, no window sort needed, one shuffle on dst.
 Convergence: count of changed labels (single aggregate collect).
 
-Physical strategy (mirrors operators/pagerank.py shuffle mode): the
-symmetrized edge table is hash-partitioned by ``src`` — the
-per-round join key — and cached ONCE in a single fused exchange, so
-each round re-exchanges only the |V|-row label side, never the |E|
-edge side; lineage is truncated with a LAZY localCheckpoint that
-materializes inside the round's convergence aggregate — one Spark job
-per round, not two.  AQE stays ON: unlike PageRank's
-byte-identical iterations, LPA's per-round histogram shrinks as
-labels converge, and runtime coalescing measured faster (sf0.1
-medians 1.7s AQE vs 2.1s static; both ~3x the unfused round-2
-build).
+Physical strategy:
+    - local (``_lpa_local``): when the graph fits one task, the whole
+      loop runs in one ``mapInArrow`` task over ``edges.coalesce(1)``
+      (``local_backend.run_one_task``), a NumPy replay of the same
+      synchronous rounds (``_lpa_kernel``) with no |E|-row cache.
+      Selection: ``local_backend.edge_list_probe``, one aggregate over
+      the input — integral ``src``/``dst``, no NULL endpoint, and
+      240 B·|E| + 48 B·2|E| within LOCAL_MAX_BYTES.  An input with a
+      NULL endpoint runs distributed, unchanged.
+    - Contracts of the local path: the same rounds, the same min-label
+      tie-break and the same stop, the same labels for every
+      ``max_iter``, truncated runs included.  A caller's cadence commits
+      the same states and metrics rows (iteration, ``changed``,
+      ``wall_ms``, ``plan`` and the probe) as the distributed loop, so a
+      run resumes on either backend, bit-identically.  Without a
+      caller's checkpoint nothing is committed.
+    - distributed (mirrors operators/pagerank.py shuffle mode): the
+      symmetrized edge table is hash-partitioned by ``src`` — the
+      per-round join key — and cached ONCE in a single fused exchange,
+      so each round re-exchanges only the |V|-row label side, never the
+      |E| edge side; lineage is truncated with a LAZY localCheckpoint
+      that materializes inside the round's convergence aggregate — one
+      Spark job per round, not two.  AQE stays ON: unlike PageRank's
+      byte-identical iterations, LPA's per-round histogram shrinks as
+      labels converge, and runtime coalescing measured faster (sf0.1
+      medians 1.7s AQE vs 2.1s static; both ~3x the unfused round-2
+      build).
+    - Both backends return a materialised result and release every
+      cache they made.
 
 Determinism note: synchronous LPA can 2-cycle on bipartite structures;
 ``max_iter`` bounds the loop and the changed-count history detects the
-oscillation (we stop when changed == 0 or the (changed, checksum)
-signature repeats).
+oscillation (we stop when changed == 0 or the (changed, labels)
+signature repeats within one call; a resumed call starts a new
+history on both backends).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import functools
+import time
 
-from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
+import numpy as np
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField
+
+from pagerank_spark import local_backend
+from pagerank_spark.checkpoint import (CheckpointManager, release,
+                                       scoped_checkpoint)
+from pagerank_spark.local_backend import sort_pairs
 
 
 def label_propagation(
@@ -46,47 +73,54 @@ def label_propagation(
     resume: bool = False,
 ) -> DataFrame:
     """(id, label) for every vertex incident to an edge."""
-    # src-layout once: InMemoryRelation preserves outputPartitioning,
-    # so every round's join on ``src`` reuses it and exchanges only
-    # the label side.  The layout is FUSED with the symmetrize dedupe
-    # in a single exchange: hash(src) partitioning satisfies the
-    # dropDuplicates' ClusteredDistribution([src, dst]) — equal
-    # (src, dst) pairs land in one partition — so the dedupe
-    # aggregation runs partition-local after the one repartition,
-    # instead of shuffling once on (src, dst) and again on src.
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    und = (
-        fwd.unionByName(rev)
-        .where(F.col("src") != F.col("dst"))
-        .repartition(edges.rdd.getNumPartitions(), "src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-    # try/finally: the |E|-sized cache must be released on every exit
-    # path, including job failures mid-loop.  Durable truncation
-    # cadence — see operators/pagerank.py for why localCheckpoint alone
-    # is insufficient (stats-estimate blowup).
-    try:
-        with scoped_checkpoint(checkpoint, "lpa_ckpt_", lambda root: CheckpointManager(
-                edges.sparkSession, root, interval=8)) as (checkpoint, owned):
-            return _lpa_loop(und, max_iter, checkpoint, owned, resume)
-    finally:
-        und.unpersist()
+    local, probe = local_backend.edge_list_probe(edges)
+    # Durable truncation cadence — see operators/pagerank.py for why
+    # localCheckpoint alone is insufficient (stats-estimate blowup).
+    with scoped_checkpoint(checkpoint, "lpa_ckpt_", lambda root: CheckpointManager(
+            edges.sparkSession, root, interval=8)) as (checkpoint, owned):
+        start, labels = 0, None
+        if resume and checkpoint.latest_iteration() is not None:
+            start = checkpoint.latest_iteration()
+            labels = checkpoint.read_state(start).select("id", "label")
+        if local:
+            return _lpa_local(edges, labels, start, max_iter,
+                              None if owned else checkpoint, probe)
+        # src-layout once: InMemoryRelation preserves outputPartitioning,
+        # so every round's join on ``src`` reuses it and exchanges only
+        # the label side.  The layout is FUSED with the symmetrize dedupe
+        # in a single exchange: hash(src) partitioning satisfies the
+        # dropDuplicates' ClusteredDistribution([src, dst]) — equal
+        # (src, dst) pairs land in one partition — so the dedupe
+        # aggregation runs partition-local after the one repartition,
+        # instead of shuffling once on (src, dst) and again on src.
+        fwd = edges.select("src", "dst")
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        und = (
+            fwd.unionByName(rev)
+            .where(F.col("src") != F.col("dst"))
+            .repartition(edges.rdd.getNumPartitions(), "src")
+            .dropDuplicates(["src", "dst"])
+            .persist()
+        )
+        # try/finally: the |E|-sized cache must be released on every
+        # exit path, including job failures mid-loop.
+        try:
+            return _lpa_loop(und, labels, start, max_iter, checkpoint, probe)
+        finally:
+            und.unpersist()
 
 
 def _lpa_loop(
     und: DataFrame,
+    labels: DataFrame | None,
+    it: int,
     max_iter: int,
     checkpoint: CheckpointManager,
-    owned: bool,
-    resume: bool,
+    probe: dict,
 ) -> DataFrame:
-    if resume and checkpoint.latest_iteration() is not None:
-        it = checkpoint.latest_iteration()
-        labels = checkpoint.read_state(it).select("id", "label").persist()
+    if labels is not None:
+        labels = labels.persist()
     else:
-        it = 0
         labels = (
             und.select(F.col("src").alias("id"))
             .distinct()
@@ -95,10 +129,12 @@ def _lpa_loop(
         )
 
     seen_sigs: set[tuple[int, int]] = set()
-    prev_cached = labels
-    durable = False
+    # ``prev_cached`` holds the current labels: a cache until the first
+    # localCheckpoint'ed round, and again after a durable one.
+    prev_cached, cached = labels, True
     while it < max_iter:
         it += 1
+        t0 = time.monotonic()
         lab_src = labels.select(F.col("id").alias("src"), "label")
         # Per-dst neighbor-label histogram → argmax count, min-label ties.
         # Encode the argmax ordering as a single min-struct key so the
@@ -121,8 +157,8 @@ def _lpa_loop(
                     F.coalesce("label", "old_label").alias("label"),
                     "old_label")
         )
-        durable = checkpoint.should_checkpoint(it)
-        if durable:
+        cached = checkpoint.should_checkpoint(it)
+        if cached:
             merged = checkpoint.write_state(merged, it).persist()
         else:
             # Truncate lineage each round (plan would double per
@@ -134,20 +170,109 @@ def _lpa_loop(
             F.expr("bit_xor(xxhash64(id, label))").alias("h"),
         ).first()
         changed, sig = int(row["chg"] or 0), (int(row["chg"] or 0), int(row["h"] or 0))
-        if durable:
-            checkpoint.write_metrics(it, {"changed": float(changed)})
-        prev_cached.unpersist()
+        if cached:
+            checkpoint.write_metrics(
+                it, {"changed": float(changed),
+                     "wall_ms": (time.monotonic() - t0) * 1000.0, **probe})
+        release(prev_cached)
         prev_cached = merged
         labels = merged.select("id", "label")
         if changed == 0 or sig in seen_sigs:
             break
         seen_sigs.add(sig)
 
-    if owned and durable:
-        # The last labels were read back from the temporary root.
+    if cached:
+        # Materialised, so that no cache stays pinned and nothing reads
+        # from a temporary checkpoint root after the call.
         labels = prev_cached.localCheckpoint(eager=True).select("id", "label")
         prev_cached.unpersist()
     return labels
+
+
+def _lpa_local(edges: DataFrame, labels: DataFrame | None, start: int,
+               max_iter: int, ckpt: CheckpointManager | None,
+               probe: dict) -> DataFrame:
+    """The whole loop in one task (``_lpa_kernel``), with no |E|-row
+    cache; commits the states on ``ckpt``'s cadence, if a caller's
+    manager is given."""
+    id_type = (edges.select(F.col("src").alias("id"))
+               .unionByName(edges.select(F.col("dst").alias("id")))
+               .schema["id"].dataType)
+    inputs = edges.select("src", "dst")
+    if labels is not None:
+        inputs = inputs.unionByName(labels, allowMissingColumns=True)
+    fields = [StructField(c, id_type) for c in ("id", "label", "old_label")]
+    kernel = functools.partial(
+        _lpa_kernel, start=start, max_iter=max_iter,
+        interval=ckpt.interval if ckpt is not None else None)
+    out, _, _ = local_backend.run_one_task(
+        inputs, kernel, fields, state_cols=["id", "label", "old_label"],
+        result_cols=["id", "label"], ckpt=ckpt, record=probe)
+    return out
+
+
+def _lpa_kernel(table, records, *, start: int, max_iter: int,
+                interval: int | None):
+    """NumPy replay of ``_lpa_loop``'s synchronous rounds: the same
+    argmax count with the smallest label on ties, and the same stop
+    (nothing changed, or a (changed, labels) signature seen before in
+    this call; the labels enter it as a 128-bit BLAKE2 digest here and
+    a 64-bit xxhash digest in the distributed loop).  Input rows are edges (``id`` NULL) or the labels at
+    ``start``."""
+    import hashlib
+
+    import pyarrow.compute as pc
+
+    et, st = table, None
+    if start > 0:
+        is_state = pc.is_valid(table["id"])
+        st = table.filter(is_state).sort_by("id")
+        et = table.filter(pc.invert(is_state))
+    src, dst = (et[c].to_numpy().astype(np.int64) for c in ("src", "dst"))
+    del table, et
+    keep = src != dst
+    u, v = sort_pairs(np.concatenate([src[keep], dst[keep]]),
+                       np.concatenate([dst[keep], src[keep]]), unique=True)
+    ids = np.unique(u)
+    iu, iv = np.searchsorted(ids, u), np.searchsorted(ids, v)
+    del src, dst, keep, u, v
+    if start == 0:
+        labels = ids.copy()
+    else:
+        if not np.array_equal(st["id"].to_numpy().astype(np.int64), ids):
+            raise ValueError("the resumed labels must cover the vertices "
+                             "of the edges once")
+        labels = st["label"].to_numpy().astype(np.int64)
+    seen: set[tuple[int, bytes]] = set()
+    it, stopped = start, False
+    while it < max_iter and not stopped:
+        it += 1
+        t0 = time.perf_counter()
+        # (dst, label of src) pairs counted, then per dst the largest
+        # count and, among equals, the smallest label.
+        dv, dl = sort_pairs(iv, labels[iu])
+        new = labels.copy()
+        if dv.size:
+            first = np.flatnonzero(np.r_[True, (dv[1:] != dv[:-1])
+                                         | (dl[1:] != dl[:-1])])
+            cnt = np.diff(np.r_[first, dv.size])
+            gv, gl = dv[first], dl[first]
+            best = np.lexsort((gl, -cnt, gv))
+            best = best[np.r_[True, gv[best][1:] != gv[best][:-1]]]
+            new[gv[best]] = gl[best]
+        old, labels = labels, new
+        changed = int((labels != old).sum())
+        sig = (changed, hashlib.blake2b(labels.tobytes(),
+                                        digest_size=16).digest())
+        stopped = changed == 0 or sig in seen
+        seen.add(sig)
+        commit = bool(interval) and it % interval == 0
+        records.append((it, {"changed": float(changed),
+                             "wall_ms": (time.perf_counter() - t0) * 1000.0,
+                             "_commit": commit, "_stopped": stopped}))
+        if commit:
+            yield it, {"id": ids, "label": labels, "old_label": old}
+    yield None, {"id": ids, "label": labels}
 
 
 def modularity(edges: DataFrame, labels: DataFrame,

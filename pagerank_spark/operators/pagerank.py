@@ -78,9 +78,10 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager, scoped_checkpoint
+from pagerank_spark import local_backend, skew
+from pagerank_spark.checkpoint import (CheckpointManager, release,
+                                       scoped_checkpoint)
 from pagerank_spark.graph import Graph
-from pagerank_spark import skew
 
 DAMPING = 0.85           # ref pagerank.hpp:14
 MAX_ITER = 100_000       # ref main.cpp:7
@@ -94,14 +95,14 @@ AUTO_SALT_PARTITION_FRACTION = 0.5
 # exchange task holds more than this many |V|-side rows.
 STATE_ROWS_PER_PARTITION = 500_000
 # Local backend: the whole loop runs in one Python task when the
-# footprint estimated by ``_local_footprint`` fits LOCAL_MAX_BYTES.
-# The per-edge and per-vertex costs are the kernel's measured peak RSS
-# above the worker's idle baseline (ARCHITECTURE.md, "Local backend").
+# footprint estimated by ``_local_footprint`` fits
+# ``local_backend.LOCAL_MAX_BYTES``.  The per-edge and per-vertex costs
+# are the kernel's measured peak RSS above the worker's idle baseline
+# (ARCHITECTURE.md, "Local backend").
 LOCAL_BYTES_PER_EDGE = 120
 LOCAL_BYTES_PER_VERTEX = 160
-LOCAL_MAX_BYTES = 1 << 30
 # Upper bound on one cached cadence state row of a local task: up to
-# five 8-byte state columns, the iteration and the (NULL) metrics.
+# five 8-byte state columns and the iteration.
 LOCAL_BYTES_PER_CACHED_ROW = 64
 
 
@@ -560,15 +561,13 @@ def _choose_mode(out_deg: DataFrame, n: int, gather: dict) -> tuple[str, dict]:
     aggregate over the persisted degree table, run only for that check:
     ``num_edges`` and ``est_bytes`` are None whenever it did not run."""
     mode = gather["mode"]
-    probe = {"num_edges": None, "n": n, "est_bytes": None,
-             "budget_bytes": LOCAL_MAX_BYTES}
     if (mode == "auto" and gather["salt_threshold"] is None
             and n <= gather["broadcast_max_vertices"]):
         num_edges = int(out_deg.agg(F.sum("out_deg")).first()[0] or 0)
         est = _local_footprint(num_edges, n)
-        probe.update(num_edges=num_edges, est_bytes=est)
-        mode = "local" if est <= LOCAL_MAX_BYTES else "broadcast"
-    return mode, probe
+        mode = "local" if est <= local_backend.LOCAL_MAX_BYTES else "broadcast"
+        return mode, local_backend.budget_probe(num_edges, n, est)
+    return mode, local_backend.budget_probe(None, n, None)
 
 
 def _run_local(edges: DataFrame, state: DataFrame, it: int, l1: float,
@@ -589,7 +588,8 @@ def _run_local(edges: DataFrame, state: DataFrame, it: int, l1: float,
     uninterrupted run within this backend (not across backends: the
     summation order differs)."""
     interval = ckpt.interval if ckpt is not None else None
-    per_task = max(LOCAL_MAX_BYTES // (LOCAL_BYTES_PER_CACHED_ROW * n), 1)
+    per_task = max(local_backend.LOCAL_MAX_BYTES
+                   // (LOCAL_BYTES_PER_CACHED_ROW * n), 1)
     metrics, stopped = [], False
     while it < max_iter and not stopped:
         end = max_iter if interval is None else min(
@@ -604,78 +604,38 @@ def _run_local(edges: DataFrame, state: DataFrame, it: int, l1: float,
 def _local_task(edges: DataFrame, state: DataFrame, it: int, l1: float,
                 end: int, local, stop, *, ckpt, n: int, dangling_col: str,
                 probe: dict):
-    """Iterations ``it+1..end`` in ONE Spark task; returns ``(last state,
-    iteration, stopped, metrics)``.
-
-    One ``mapInArrow`` over the edges and ``state``, coalesced to one
-    partition, runs ``_power_kernel``.  The kernel emits every state on
-    ``ckpt``'s cadence as it is produced, the last state, and one
-    metrics row per iteration; the output is cached, and the driver
-    commits the cadence states in order through ``ckpt.write_state`` /
-    ``write_metrics``."""
-    import json
-
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
-
+    """Iterations ``it+1..end`` in ONE Spark task (``_power_kernel``
+    through ``local_backend.run_one_task``, which commits the states on
+    ``ckpt``'s cadence); returns ``(last state, iteration, stopped,
+    metrics)``."""
     cols = state.columns
-    schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in state.schema]
-        + [StructField("iteration", IntegerType(), True),
-           StructField("metrics", StringType(), True)])
     kernel = functools.partial(
         _power_kernel, n=n, start=it, l1=l1, max_iter=end,
         interval=ckpt.interval if ckpt is not None else None,
         local=local, stop=stop, dangling_col=dangling_col, cols=cols)
-    out = (edges.unionByName(state, allowMissingColumns=True).coalesce(1)
-           .mapInArrow(kernel, schema).persist())
-    try:
-        # The kernel's one job: this collect materializes the cache.
-        rows = out.where(F.col("metrics").isNotNull()) \
-            .select("iteration", "metrics").collect()
-        state.unpersist()
-
-        def state_at(k):
-            return out.where(F.col("id").isNotNull()
-                             & (F.col("iteration") == k)).select(*cols)
-
-        metrics, committed, stopped = [], None, False
-        for row in sorted(rows, key=lambda r: r["iteration"]):
-            m = json.loads(row["metrics"])
-            commit, stopped = m.pop("_commit"), m.pop("_stopped")
-            it = row["iteration"]
-            m.update(rows=float(n), num_partitions=1.0, **probe)
-            metrics.append({"iteration": it, **m})
-            if commit:
-                committed = ckpt.write_state(state_at(it), it,
-                                             target_partitions=_state_files(n))
-                ckpt.write_metrics(it, m)
-        # The last state: its committed read-back, else materialized
-        # off the cache released below.
-        final = committed if commit else state_at(it).localCheckpoint(eager=True)
-        return final, it, stopped, metrics
-    finally:
-        out.unpersist()
+    final, metrics, stopped = local_backend.run_one_task(
+        edges.unionByName(state, allowMissingColumns=True), kernel,
+        state.schema.fields, state_cols=cols, result_cols=cols, ckpt=ckpt,
+        record={"rows": float(n), "num_partitions": 1.0, **probe},
+        state_files=_state_files(n))
+    release(state)
+    return final, metrics[-1]["iteration"], stopped, metrics
 
 
-def _power_kernel(batches, *, n: int, start: int, l1: float, max_iter: int,
-                  interval: int | None, local, stop, dangling_col: str,
-                  cols: list[str]):
-    """``mapInArrow`` body of the local backend (one task).
+def _power_kernel(table, records, *, n: int, start: int, l1: float,
+                  max_iter: int, interval: int | None, local, stop,
+                  dangling_col: str, cols: list[str]):
+    """Kernel of the local backend (one task, ``run_one_task``).
 
     Input rows are edges (``id`` NULL) or the state at ``start``.
     Edges are sorted by (src, dst), so each ``np.bincount`` gather sums
     in a fixed order.  Keeps the driver's contract: zero dangling mass
     before step 1 (a resumed state's is recomputed), the stop rule
     after each update, ``max_iter``, and ``prev_pr`` for Q4.  Yields
-    each state on the ``interval`` cadence as it is produced, the last
-    state, then one (iteration, metrics JSON) row per iteration."""
-    import json
-
-    import pyarrow as pa
+    each state on the ``interval`` cadence as it is produced, then the
+    last state as the result."""
     import pyarrow.compute as pc
 
-    table = pa.Table.from_batches(list(batches))
     is_state = pc.is_valid(table["id"])
     st = table.filter(is_state).select(cols).sort_by("id")
     et = table.filter(pc.invert(is_state)).drop_columns(cols)
@@ -696,18 +656,14 @@ def _power_kernel(batches, *, n: int, start: int, l1: float, max_iter: int,
         v = w[src] if value is None else w[src] * edge_cols[value]
         return np.bincount(dst, weights=v, minlength=n)
 
-    def state_batch(k):
-        arrays = [pa.array(x[c]) if c in ("pr", "prev_pr")
-                  else st[c].combine_chunks() for c in cols]
-        return pa.RecordBatch.from_arrays(
-            arrays + [pa.array(np.full(n, k, np.int32)), pa.nulls(n, pa.string())],
-            names=cols + ["iteration", "metrics"])
+    def state():
+        return {c: x[c] if c in ("pr", "prev_pr") else st[c] for c in cols}
 
     dangling = 0.0
     if start > 0:
         l1 = float(np.abs(x["pr"] - x["prev_pr"]).sum())
         dangling = float(x["pr"][is_dangling].sum())
-    records, it, stopped, commit = [], start, False, False
+    it, stopped = start, False
     while it < max_iter and not stopped:
         it += 1
         t0 = time.perf_counter()
@@ -730,15 +686,8 @@ def _power_kernel(batches, *, n: int, start: int, l1: float, max_iter: int,
                  _commit=commit, _stopped=stopped)
         records.append((it, m))
         if commit:
-            yield state_batch(it)
-    if not commit:
-        yield state_batch(it)
-    k = len(records)
-    yield pa.RecordBatch.from_arrays(
-        [pa.nulls(k, st.schema.field(c).type) for c in cols]
-        + [pa.array([r[0] for r in records], pa.int32()),
-           pa.array([json.dumps(r[1]) for r in records], pa.string())],
-        names=cols + ["iteration", "metrics"])
+            yield it, state()
+    yield None, state()
 
 
 def _state_agg(state: DataFrame, dangling_col: str = "out_deg") -> dict:

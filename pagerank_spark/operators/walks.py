@@ -36,7 +36,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from pagerank_spark.checkpoint import CheckpointManager, detach, scoped_checkpoint
+from pagerank_spark.checkpoint import (CheckpointManager, detach, release,
+                                       scoped_checkpoint)
 from pagerank_spark.operators.bfs import BROADCAST_MAX_FRONTIER
 
 
@@ -310,7 +311,10 @@ def _node2vec_loop(und: DataFrame, starts: DataFrame, num_steps: int,
         if checkpoint.should_checkpoint(t):
             nxt_frontier = checkpoint.write_state(nxt_frontier, t).persist()
         else:
-            nxt_frontier = nxt_frontier.persist()
+            # Truncate lineage: the next frontier reads this one twice
+            # (directly and through the candidates), so its plan doubles
+            # per step.  LAZY: it materializes in the aggregate below.
+            nxt_frontier = nxt_frontier.localCheckpoint(eager=False)
         step_rows = nxt_frontier.select(
             "walk_id", F.lit(t).cast("int").alias("step"),
             F.col("cur").alias("id"))
@@ -327,13 +331,13 @@ def _node2vec_loop(und: DataFrame, starts: DataFrame, num_steps: int,
         alive = int(row["alive"] or 0)
         if checkpoint.should_checkpoint(t):
             checkpoint.write_metrics(t, {"alive": float(alive)})
-        frontier.unpersist()
+        release(frontier)
         frontier = nxt_frontier
         f_rows = alive
         if alive == 0:
             break
     result = out.select("walk_id", "step", "id").localCheckpoint(eager=True)
-    frontier.unpersist()
+    release(frontier)
     adj.unpersist()
     if laid_out:
         und.unpersist()   # the relaid copy; the caller releases its own

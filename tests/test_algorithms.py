@@ -1,12 +1,13 @@
 """Connected components / label propagation / triangle counting vs
-exact fixtures (FIXTURES.md F4) and brute-force oracles."""
+exact fixtures (FIXTURES.md F4) and brute-force oracles.  The component
+and label propagation oracle and resume tests run both backends."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from conftest import edges_df
+from conftest import BACKENDS, edges_df, on_backend
 from oracles import (
     F2_EDGES,
     components_oracle,
@@ -25,12 +26,14 @@ def _clique(ids):
     return [(a, b) for a in ids for b in ids if a < b]
 
 
-def test_two_cliques_components(spark):
+def test_two_cliques_components(spark, monkeypatch):
     edges = _clique(range(5)) + _clique(range(10, 14))
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges_df(spark, edges)).collect()}
-    assert comp == components_oracle(edges)
-    assert set(comp.values()) == {0, 10}
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            comp = {r["id"]: r["component"] for r in
+                    connected_components(edges_df(spark, edges)).collect()}
+        assert comp == components_oracle(edges)
+        assert set(comp.values()) == {0, 10}
 
 
 def test_two_cliques_triangles(spark):
@@ -63,17 +66,19 @@ def test_f2_fixture(spark):
     assert len(set(labels.values())) == 1
 
 
-def test_components_self_loop_only_vertex(spark):
+def test_components_self_loop_only_vertex(spark, monkeypatch):
     # Explicit self-loop semantics (round-1 judge item): vertex 5's ONLY
     # edge is a self-loop — it is incident to an edge, so it appears in
     # the output labelled by itself; propagation itself ignores loops.
     edges = [(0, 1), (1, 2), (5, 5), (0, 0)]
-    comp = {r["id"]: r["component"]
-            for r in connected_components(edges_df(spark, edges)).collect()}
-    assert comp == components_oracle(edges)
-    assert comp[5] == 5          # self-loop-only vertex, own component
-    assert comp[0] == 0          # self-loop on a connected vertex: no-op
-    assert comp == {0: 0, 1: 0, 2: 0, 5: 5}
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            comp = {r["id"]: r["component"] for r in
+                    connected_components(edges_df(spark, edges)).collect()}
+        assert comp == components_oracle(edges)
+        assert comp[5] == 5          # self-loop-only vertex, own component
+        assert comp[0] == 0          # self-loop on a connected vertex: no-op
+        assert comp == {0: 0, 1: 0, 2: 0, 5: 5}
 
 
 def test_components_with_domain_isolated(spark):
@@ -83,38 +88,45 @@ def test_components_with_domain_isolated(spark):
     assert comp == {0: 0, 1: 1, 2: 0}
 
 
-def test_random_graph_components_triangles(spark):
+def test_random_graph_components_triangles(spark, monkeypatch):
     rng = np.random.default_rng(42)
     n, p = 100, 0.03
     edges = [(int(i), int(j)) for i in range(n) for j in range(n)
              if i != j and rng.random() < p]
     df = edges_df(spark, edges)
-    comp = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    assert comp == components_oracle(edges)
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            comp = {r["id"]: r["component"]
+                    for r in connected_components(df).collect()}
+        assert comp == components_oracle(edges)
     assert triangle_count(df) == triangles_oracle(edges)
 
 
-def test_label_propagation_two_cliques(spark):
+def test_label_propagation_two_cliques(spark, monkeypatch):
     edges = _clique(range(5)) + _clique(range(10, 14))
-    labels = {r["id"]: r["label"]
-              for r in label_propagation(edges_df(spark, edges)).collect()}
     oracle = label_propagation_oracle(edges)
-    assert labels == oracle
-    # Two disjoint cliques → two distinct labels.
-    assert len({labels[i] for i in range(5)}) == 1
-    assert len({labels[i] for i in range(10, 14)}) == 1
-    assert labels[0] != labels[10]
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            labels = {r["id"]: r["label"] for r in
+                      label_propagation(edges_df(spark, edges)).collect()}
+        assert labels == oracle
+        # Two disjoint cliques → two distinct labels.
+        assert len({labels[i] for i in range(5)}) == 1
+        assert len({labels[i] for i in range(10, 14)}) == 1
+        assert labels[0] != labels[10]
 
 
-def test_label_propagation_matches_oracle_random(spark):
+def test_label_propagation_matches_oracle_random(spark, monkeypatch):
     rng = np.random.default_rng(7)
     n, p = 40, 0.08
     edges = [(int(i), int(j)) for i in range(n) for j in range(n)
              if i != j and rng.random() < p]
-    labels = {r["id"]: r["label"]
-              for r in label_propagation(edges_df(spark, edges), max_iter=10).collect()}
     oracle = label_propagation_oracle(edges, max_iter=10)
-    assert labels == oracle
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            labels = {r["id"]: r["label"] for r in label_propagation(
+                edges_df(spark, edges), max_iter=10).collect()}
+        assert labels == oracle
 
 
 def test_triangle_direction_invariance(spark):
@@ -125,35 +137,42 @@ def test_triangle_direction_invariance(spark):
     assert triangle_count(edges_df(spark, flipped)) == 1
 
 
-def test_cc_resume(spark, tmp_path):
+def test_cc_resume(spark, tmp_path, monkeypatch):
     from pagerank_spark.checkpoint import CheckpointManager
     edges = _clique(range(6)) + [(20, 21), (21, 22)]
     df = edges_df(spark, edges)
-    full = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            full = {r["id"]: r["component"]
+                    for r in connected_components(df).collect()}
 
-    ck = CheckpointManager(spark, str(tmp_path / "cc"), interval=1)
-    connected_components(df, max_iter=1, checkpoint=ck)
-    assert ck.latest_iteration() == 1
-    resumed = {r["id"]: r["component"]
-               for r in connected_components(df, checkpoint=ck,
-                                             resume=True).collect()}
-    assert resumed == full
+            ck = CheckpointManager(spark, str(tmp_path / backend / "cc"),
+                                   interval=1)
+            connected_components(df, max_iter=1, checkpoint=ck)
+            assert ck.latest_iteration() == 1
+            resumed = {r["id"]: r["component"]
+                       for r in connected_components(df, checkpoint=ck,
+                                                     resume=True).collect()}
+        assert resumed == full
 
 
-def test_lpa_resume(spark, tmp_path):
+def test_lpa_resume(spark, tmp_path, monkeypatch):
     from pagerank_spark.checkpoint import CheckpointManager
-    from oracles import label_propagation_oracle
     edges = _clique(range(5)) + _clique(range(10, 14))
     df = edges_df(spark, edges)
-    full = {r["id"]: r["label"] for r in label_propagation(df).collect()}
+    for backend in BACKENDS:
+        with on_backend(monkeypatch, backend):
+            full = {r["id"]: r["label"]
+                    for r in label_propagation(df).collect()}
 
-    ck = CheckpointManager(spark, str(tmp_path / "lpa"), interval=1)
-    label_propagation(df, max_iter=1, checkpoint=ck)
-    assert ck.latest_iteration() == 1
-    resumed = {r["id"]: r["label"]
-               for r in label_propagation(df, checkpoint=ck,
-                                          resume=True).collect()}
-    assert resumed == full
+            ck = CheckpointManager(spark, str(tmp_path / backend / "lpa"),
+                                   interval=1)
+            label_propagation(df, max_iter=1, checkpoint=ck)
+            assert ck.latest_iteration() == 1
+            resumed = {r["id"]: r["label"]
+                       for r in label_propagation(df, checkpoint=ck,
+                                                  resume=True).collect()}
+        assert resumed == full
 
 
 # ------------------------------------------------------------------ BFS

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from conftest import edges_df
 from oracles import F2_EDGES
-from pagerank_spark import graph
+from pagerank_spark import graph, local_backend
 from pagerank_spark.checkpoint import CheckpointManager
 from pagerank_spark.operators.bfs import bfs_depths
 from pagerank_spark.operators.centrality import multi_source_bfs
@@ -75,7 +75,9 @@ FAMILY = {
 
 # Each returns the operator's result frame after CADENCE iterations.
 # The family runs its default backend (local on these graphs) and the
-# distributed broadcast loop.
+# distributed broadcast loop; connected components and label propagation
+# run their default (local) and, as ``<name>/distributed``, their
+# distributed loop.
 ENTRY_POINTS = {
     **{name: (lambda spark, ck, run=run: run(
         spark, tol=0.0, max_iter=CADENCE, checkpoint=ck).ranks)
@@ -84,10 +86,11 @@ ENTRY_POINTS = {
         spark, tol=0.0, max_iter=CADENCE, checkpoint=ck,
         gather_mode="broadcast").ranks)
        for name, run in FAMILY.items()},
-    "connected_components": lambda spark, ck: connected_components(
-        edges_df(spark, PATH), max_iter=CADENCE, checkpoint=ck),
-    "label_propagation": lambda spark, ck: label_propagation(
-        edges_df(spark, PATH), max_iter=CADENCE, checkpoint=ck),
+    **{f"{name}{suffix}": (lambda spark, ck, run=run: run(
+        edges_df(spark, PATH), max_iter=CADENCE, checkpoint=ck))
+       for name, run in (("connected_components", connected_components),
+                         ("label_propagation", label_propagation))
+       for suffix in ("", "/distributed")},
     "bfs_depths": lambda spark, ck: bfs_depths(
         edges_df(spark, PATH), [0], max_depth=CADENCE, checkpoint=ck),
     "multi_source_bfs": lambda spark, ck: multi_source_bfs(
@@ -148,6 +151,9 @@ COMMON_KEYS = {"iteration", "l1", "prev_l1", "dangling_mass", "sum_pr",
 def test_default_root_removed_and_result_detached(spark, tmp_path,
                                                   monkeypatch, name):
     run = ENTRY_POINTS.get(name) or EVERY_ROUND[name]
+    if name.endswith("/distributed"):
+        # Below any estimate: the distributed loop.
+        monkeypatch.setattr(local_backend, "LOCAL_MAX_BYTES", -1)
     ck = CheckpointManager(spark, str(tmp_path / "explicit"),
                            interval=CADENCE if name in ENTRY_POINTS else 1)
     want = sorted(run(spark, ck).collect())

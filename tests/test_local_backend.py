@@ -12,7 +12,7 @@ import pytest
 
 from conftest import edges_df
 from oracles import F2_EDGES, pagerank_oracle
-from pagerank_spark import graph
+from pagerank_spark import graph, local_backend
 from pagerank_spark.checkpoint import CheckpointManager, TableCheckpointManager
 from pagerank_spark.io import TableIO
 from pagerank_spark.operators.pagerank import pagerank, plan_gather
@@ -105,7 +105,7 @@ def test_table_checkpoint_resumes_on_the_other_backend(spark, tmp_path,
     plan = {"auto": "local", "broadcast": "broadcast"}
     assert ck.read_metric(8, "plan") == plan[first]
     assert ck.read_metric(132, "plan") == plan[then]
-    assert ck.read_metric(8, "budget_bytes") == pr_mod.LOCAL_MAX_BYTES
+    assert ck.read_metric(8, "budget_bytes") == local_backend.LOCAL_MAX_BYTES
 
 
 @pytest.mark.parametrize("tol,max_iter", [(0.0, 20), (1e-10, 100_000)])
@@ -126,7 +126,7 @@ def test_local_run_split_into_tasks(spark, tmp_path, monkeypatch, tol,
     monkeypatch.setattr(pr_mod, "_local_task", lambda *a, **kw: (
         tasks.append(a[2]), local_task(*a, **kw))[1])
     monkeypatch.setattr(pr_mod, "LOCAL_BYTES_PER_CACHED_ROW",
-                        pr_mod.LOCAL_MAX_BYTES // (2 * g.n))
+                        local_backend.LOCAL_MAX_BYTES // (2 * g.n))
     split_ck, split = run("split")
     assert tasks == list(range(0, split.iterations, 8))
     assert split.iterations == one.iterations
@@ -144,7 +144,7 @@ def test_auto_budget_boundary(spark, monkeypatch):
     num_edges = g.edges.count()
     est = pr_mod._local_footprint(num_edges, g.n)
     for budget, plan in ((est, "local"), (est - 1, "broadcast")):
-        monkeypatch.setattr(pr_mod, "LOCAL_MAX_BYTES", budget)
+        monkeypatch.setattr(local_backend, "LOCAL_MAX_BYTES", budget)
         res = pagerank(g, tol=0.0, max_iter=2)
         for m in res.metrics:
             assert m["plan"] == plan
